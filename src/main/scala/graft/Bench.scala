@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every declared query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric","value","unit","queries","sf"}.
@@ -52,24 +51,12 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Scan-split sizing, env-tunable for experiments. A/B at sf0.1
-      // measured 1m/256k vs the 128m/4m defaults WALL-NEUTRAL on the
-      // scan-heaviest gates (q89/q179/q238/q242/q246 within ±3%): the
-      // 4 MB open-cost floor already splits the 11 MB lineitem into ~3
-      // tasks and the per-stage cost is elsewhere — keep the defaults.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "128m"))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "4194304"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Scan-split sizing stays at Spark's defaults (128m max partition
+    // bytes, 4 MB open cost): an A/B at sf0.1 measured 1m/256k against
+    // them WALL-NEUTRAL on the scan-heaviest gates (q89/q179/q238/q242/
+    // q246 within ±3%) — the open-cost floor already splits the 11 MB
+    // lineitem into ~3 tasks and the per-stage cost is elsewhere.
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val sc = spark.sparkContext
 

@@ -17,9 +17,10 @@ import org.apache.spark.sql.execution.SparkStrategy
   * the check+append per session (`ExperimentalMethods` is per-session
   * state, so the lock is scoped exactly to what it guards).
   *
-  * Sessions built via [[GraftSession]] get the same rules up front through
-  * `GraftExtensions`; this path exists for externally-built sessions
-  * (tests, the driver's Verify/Bench mains) where the builder isn't ours.
+  * Every session registers its rules lazily through this helper, those
+  * built by [[GraftSession]] included: the builder installs no session
+  * extensions (`GraftExtensions` is opt-in through `spark.sql.extensions`),
+  * so the first loader or query that needs a rule attaches it.
   */
 object SessionRules {
   def ensureOptimizerRule(spark: SparkSession, rule: Rule[LogicalPlan]): Unit =

@@ -162,11 +162,9 @@ object Dedup {
           min(when($"__own", $"__prev")).as("__prev"))
         .select($"__nid".as("__id"), $"__lbl", $"__prev")
     }
-    val dbg = sys.env.get("GRAFT_CC_DEBUG").contains("1")
     var converged = false
     var iter = 1 // initialization already performed round 1
     while (!converged && iter < maxIters) {
-      val t0 = System.nanoTime()
       // ONE propagation layer per materialized round. Stacking layers
       // between barriers was measured and REJECTED: each layer references
       // its input three times (own/probe/lookup), so an L-layer stack
@@ -197,7 +195,6 @@ object Dedup {
       val changed = next.agg(coalesce(sum($"__chg"), lit(0L)))
         .collect()(0).getLong(0)
       converged = changed == 0L
-      if (dbg) println(f"CCDBG iter=$iter changed=$changed ${(System.nanoTime() - t0) / 1e9}%.3f s")
       free(labelIds)
       labels = next
       labelIds = nextIds

@@ -488,7 +488,10 @@ object Graph {
       try {
       // merge an update stream into the estimate table, flagging movers.
       // upd arrives hash-partitioned by id (agg output / aligned with the
-      // checkpointed cur), so the merge join never exchanges cur
+      // checkpointed cur). From round 1 on, cur is a merge output at the
+      // loop width, so the join does not exchange it; round 0's cur is
+      // checkpointed at the session width and is re-exchanged once — the
+      // trade the ×10 rehearsal accepted (OPTIMIZATION_r15.md item 6)
       def merge(cur: DataFrame, upd: DataFrame): DataFrame =
         cur.select($"id", $"c".as("c0")).join(upd, Seq("id"), "left")
           .select($"id", coalesce($"h", $"c0").as("c"),

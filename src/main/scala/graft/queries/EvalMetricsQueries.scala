@@ -254,10 +254,11 @@ object EvalMetricsQueries extends QueryModule {
     import s.implicits._
     val dec = org.apache.spark.sql.types.DecimalType(18, 2)
     // the indexed frame has THREE consumers (the draw stream, the join
-    // side, and the n count); without its own pin each one replays the
-    // scan's window + offsets join, so the plan carried the rowNumbers
-    // subtree twice. Lazy checkpoint: the n aggregate (always the first
-    // action) materializes the blocks while doing useful work.
+    // side, and the n count), and each one replays the rowNumbers subtree:
+    // the duplication is deliberate. A lazy pin on `base` was measured and
+    // reverted (OPTIMIZATION_r15.md item 5): in a full-run A/B its
+    // data-sized blocks cost more under block-manager pressure than the
+    // deduplicated subtree saved.
     val base = graft.operators.DistributedScan.rowNumbers(
       Tables.orders(s, dir).select($"o_orderkey", $"o_totalprice"),
       Seq($"o_orderkey"), "i")

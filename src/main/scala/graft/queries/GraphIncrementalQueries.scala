@@ -207,7 +207,7 @@ object GraphIncrementalQueries extends QueryModule {
     val cols = Seq("l_quantity", "l_extendedprice", "l_discount")
     val li = Tables.lineitem(s, dir)
     // fixed-point hot loop (r11 rewrite, A/B'd 4× faster than the
-    // per-row DECIMAL casts — MomentFixedPointProbe / SCALE.md): the
+    // per-row DECIMAL casts — SCALE.md §Round-11 fixed-point rewrite): the
     // 2-dp columns lift to LONG cents exactly, per-row products stay
     // LONG (domain-bounded: ≤1.05e7 cents ⇒ products ≤1.1e14), and only
     // the accumulators are DECIMAL(38,0) — overflow-safe at any row

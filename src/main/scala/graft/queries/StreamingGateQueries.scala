@@ -415,7 +415,7 @@ object StreamingGateQueries extends QueryModule {
     * join's output event-time floor) lags the global watermark by the
     * 1-hour interval. Windows flush in Append mode iff
     * `window_end ≤ global_wm − 1h(join interval)`.
-    * Empirically pinned (tools/ChainedStreamProbe, sf0.01): the final
+    * Empirically pinned (COVERAGE.md §q326, sf0.01): the final
     * batch window ends at 1706652000000000 µs — BELOW the naive global
     * watermark 1706653497667000 but ABOVE the join-output watermark
     * 1706649897667000 — and the streaming run withholds exactly that
@@ -490,7 +490,7 @@ object StreamingGateQueries extends QueryModule {
     * bounded by the watermark horizon instead of growing forever, under
     * a deterministic three-micro-batch file replay and the DuckDB batch
     * oracle. Every rule the oracle encodes was pinned empirically
-    * (tools/DedupWithinWmProbe, four runs):
+    * (COVERAGE.md §q329, four runs):
     *  - FileStreamSource orders same-listing files by MODIFICATION TIME
     *    — staging forces chronological mtimes;
     *  - a key lookup hits state regardless of expiry (a not-yet-evicted
@@ -592,7 +592,7 @@ object StreamingGateQueries extends QueryModule {
     * propagates its input watermark UNDELAYED — the downstream agg
     * flushes hour windows with `end ≤ global_wm` exactly — whereas the
     * interval join lowers it by the join's event-time range. Pinned
-    * empirically (tools/ChainedAggProbe): with 10-minute outer windows at
+    * empirically (COVERAGE.md §q333): with 10-minute outer windows at
     * sf0.01 the boundary window ending 1706653200000000 µs sits BETWEEN
     * `wm − 5min` and `wm`, and the streaming run EMITS it — so there is
     * provably no inner-window-size subtraction; the withheld next window

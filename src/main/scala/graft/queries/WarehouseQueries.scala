@@ -1078,7 +1078,7 @@ object WarehouseQueries extends QueryModule {
     * exact cents) into 8-bit grids, laid out into 64 equal "files" two
     * ways — linearly (sorted by customer, the single-column layout a
     * partitioned warehouse gets for free) and by the Morton-interleaved
-    * z-value ([[graft.operators.ZOrder]]) — and a quarter-domain 2-d box
+    * z-value ([[graft.layout.ZOrder]]) — and a quarter-domain 2-d box
     * query is planned against each layout's per-file min/max stats. The
     * gate emits, per layout, the file count, the files a min/max-pruning
     * scan must read, and the true row count in the box (identical across
@@ -1109,9 +1109,9 @@ object WarehouseQueries extends QueryModule {
     val b = o.withColumn("one", pmod($"ok", lit(1L)))
       .join(broadcast(st), "one")
       .select($"ok", $"n",
-        graft.operators.ZOrder.bucket($"ck", $"cklo", $"ckhi", bits).as("xb"),
-        graft.operators.ZOrder.bucket($"cents", $"clo", $"chi", bits).as("yb"))
-      .withColumn("zv", graft.operators.ZOrder.interleave2($"xb", $"yb", bits))
+        graft.layout.ZOrder.bucket($"ck", $"cklo", $"ckhi", bits).as("xb"),
+        graft.layout.ZOrder.bucket($"cents", $"clo", $"chi", bits).as("yb"))
+      .withColumn("zv", graft.layout.ZOrder.zValue(Seq($"xb", $"yb"), bits))
       .withColumn("rpf",
         (($"n" + 63L - pmod($"n" + 63L, lit(64L))) / lit(64L)).cast("long"))
     val (lo, hi) = (64L, 127L)

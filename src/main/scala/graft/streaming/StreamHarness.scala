@@ -11,7 +11,8 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
   *  - SHUFFLE WIDTH: stateful execs open state stores per shuffle
   *    partition per micro-batch (a stream-stream join opens FOUR), so
   *    partitions are pure fixed cost at gate state sizes —
-  *    StreamFloorProbe measured the task-summed store-commit time at
+  *    SCALE.md §Round-11 streaming fixed-cost decomposition measured
+  *    the task-summed store-commit time at
   *    0.4–6.9 s/gate, scaling with partitions × operators × batches.
   *    The gates ran at 8; the per-key state here is thousands of rows,
   *    so 2 is the width floor that still exercises cross-partition

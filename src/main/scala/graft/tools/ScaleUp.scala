@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal fixture writer: inflates the sf0.1 tables the flagship
@@ -27,11 +27,7 @@ object ScaleUp {
     val reps = args.headOption.map(_.toInt).getOrElse(10)
     val src = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(2).getOrElse(s"target/scale/x$reps")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val OFF = 10000000L

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Window => LW}
 
 /** Engine-wide structural audit: finds every gate whose OPTIMIZED plan
@@ -31,11 +31,7 @@ object WindowAudit {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     var flagged = 0
     for (name <- graft.SparkEntry.queries.keys.toSeq.sorted) {

@@ -8,8 +8,9 @@ import org.apache.spark.SparkContext
   * snapshotting a counting listener before/after each timed execution;
   * the listener bus is ASYNC, so without an explicit drain a query's
   * trailing job events would bleed into the next query's count (the
-  * JobFloorProbe tool papers over this with Thread.sleep(800), which at
-  * 362 queries x 2 boundaries would add ~10 minutes of dead wall).
+  * round-10 job-floor measurement, SCALE.md, settled it with
+  * Thread.sleep(800), which at 362 queries x 2 boundaries would add ~10
+  * minutes of dead wall).
   * `LiveListenerBus.waitUntilEmpty` is exactly the needed barrier but is
   * `private[spark]`, hence this one-call shim in the org.apache.spark
   * namespace (same discipline as the sql/graft expression bridge).

@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.SparkTestBase
+import graft.layout.ZOrder
 import org.apache.spark.sql.functions._
 
-/** [[ZOrder]] — the Morton clustering key: the unrolled column
+/** [[graft.layout.ZOrder]] — the Morton clustering key: the unrolled column
   * arithmetic must match a bit-twiddling reference exactly, the bucket
   * arithmetic must match integer division exactly (the double-division
   * identity it is built on), and the layout must actually cluster: over
@@ -19,7 +20,7 @@ class ZOrderSpec extends SparkTestBase {
       acc | (((x >> i) & 1L) << (2 * i)) | (((y >> i) & 1L) << (2 * i + 1))
     }
 
-  test("interleave2 matches the bit-twiddling reference on the full 8-bit grid edge set") {
+  test("zValue of two columns matches the bit-twiddling Morton reference") {
     val pts = (for {
       x <- Seq(0L, 1L, 2L, 127L, 128L, 254L, 255L)
       y <- Seq(0L, 1L, 3L, 63L, 128L, 200L, 255L)
@@ -28,11 +29,29 @@ class ZOrderSpec extends SparkTestBase {
       Seq.fill(500)((rng.nextInt(256).toLong, rng.nextInt(256).toLong))
     }
     val got = pts.toDF("x", "y")
-      .withColumn("z", ZOrder.interleave2($"x", $"y", 8))
+      .withColumn("z", ZOrder.zValue(Seq($"x", $"y"), 8))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     pts.foreach { case (x, y) =>
       assert(got((x, y)) == refInterleave(x, y, 8),
-        s"interleave($x, $y) = ${got((x, y))}, want ${refInterleave(x, y, 8)}")
+        s"zValue($x, $y) = ${got((x, y))}, want ${refInterleave(x, y, 8)}")
+    }
+    // bucketed longs, as q366 feeds them: over [0, 255] the 8-bit bucket
+    // is the identity, so (3, 5) must give the hand-computed 39
+    // (x=011 -> 1+4, y=101 -> 2+32); over a wide domain the z-value must
+    // equal the reference interleave of the integer-division buckets
+    val rng = new scala.util.Random(0x3D0B1EL)
+    val (lo, hi) = (-500L, 6006L)
+    val raw = Seq((3L, 5L, 0L, 255L), (255L, 255L, 0L, 255L)) ++
+      Seq.fill(200)((lo + rng.nextInt(6507), lo + rng.nextInt(6507), lo, hi))
+    val bz = raw.toDF("x", "y", "lo", "hi")
+      .select(ZOrder.zValue(Seq(ZOrder.bucket($"x", $"lo", $"hi", 8),
+        ZOrder.bucket($"y", $"lo", $"hi", 8)), 8))
+      .collect().map(_.getLong(0)).toSeq
+    assert(bz.take(2) == Seq(39L, 65535L))
+    raw.zip(bz).foreach { case ((x, y, l, h), z) =>
+      def b(v: Long) = (v - l) * 256L / (h - l + 1L)
+      assert(z == refInterleave(b(x), b(y), 8),
+        s"zValue(bucket($x), bucket($y)) = $z, want ${refInterleave(b(x), b(y), 8)}")
     }
   }
 
@@ -63,7 +82,7 @@ class ZOrderSpec extends SparkTestBase {
       (i.toLong, (i % 64).toLong, (i / 64).toLong)
     }
     val df = pts.toDF("id", "xb", "yb")
-      .withColumn("zv", ZOrder.interleave2($"xb", $"yb", 6))
+      .withColumn("zv", ZOrder.zValue(Seq($"xb", $"yb"), 6))
     def fileStats(order: Seq[org.apache.spark.sql.Column]) =
       DistributedScan.rowNumbers(df, order, "rn")
         .withColumn("f", (($"rn" - 1L - pmod($"rn" - 1L, lit(128L))) / 128L)

@@ -72,7 +72,7 @@ class CatalogUpsertSpec extends SparkTestBase {
     // the upsert's only driver-sized structure is the touched-partition
     // value list; this pins the semantics when that list is large (every
     // partition touched: one update + one insert per partition). The
-    // measured ceiling lives in SCALE.md via graft.tools.UpsertScaleProbe:
+    // measured ceiling lives in SCALE.md §Round-8 partition-count ceiling:
     // 1k parts 19.0 s / 10k parts 194.9 s — linear in partition count
     // (~19 ms/partition, local-FS directory writes), driver heap delta
     // 10.5 -> 74 MB (metadata-shaped, not data-sized).

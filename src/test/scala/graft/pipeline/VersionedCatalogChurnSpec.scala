@@ -4,9 +4,10 @@ import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
 /** Commit-churn rehearsal for the versioned catalog (the round-8
-  * durability companion to UpsertScaleProbe): a long-lived writer
-  * publishes many commits against the same tables with periodic vacuum —
-  * the shape a daily medallion refresh traces over months. Pins that
+  * durability companion to SCALE.md's partition-count ceiling): a
+  * long-lived writer publishes many commits against the same tables
+  * with periodic vacuum — the shape a daily medallion refresh traces
+  * over months. Pins that
   * (a) publish cost does not grow with commit history (each publish
   * reads ONE manifest — the chain is never replayed), (b) vacuum keeps
   * disk bounded while retained commits stay readable, and (c) the final
