@@ -707,8 +707,11 @@ object GraphTraversalQueries extends QueryModule {
     // the count's real job is pinning the deg checkpoint; an empty
     // graph is a valid input and yields an empty labeling (the q268
     // convention across the graph gates — empty result, not a throw)
-    if (deg.count() == 0)
+    if (deg.count() == 0) {
+      graft.graph.Graph.releaseCheckpoint(edges0)
+      graft.graph.Graph.releaseCheckpoint(deg)
       return s.emptyDataset[(Long, Long)].toDF("node_id", "community")
+    }
     // Round shape (round-13 rework, each piece A/B'd at sf0.1): the
     // candidate stream (node, neighbor-community, k_{i,c}) is |E|-sized,
     // so (a) the argmax is the partial-combinable min(struct(-s, c))
@@ -1120,6 +1123,8 @@ object GraphTraversalQueries extends QueryModule {
     // return. Snapshot the persistent-RDD set at entry and free the
     // delta before returning (round-15, guide §5) — previously the gate
     // left 15 residual pins per execution for the session to carry.
+    // Assumes one query at a time on the session: the delta is every RDD
+    // pinned since entry, so a concurrent query's pins would be freed too.
     val pinned0 = s.sparkContext.getPersistentRDDs.keySet
     def releaseGatePins(): Unit =
       s.sparkContext.getPersistentRDDs.foreach { case (id, r) =>

@@ -11,7 +11,8 @@ import graft.{GraftSession, SparkEntry}
   * and prints every reading plus a MEDIAN line with min/max spread and
   * the per-reading Spark job count (the contention-immune arbitration
   * signal: an inflated wall at an unchanged job count is box noise, not
-  * a plan change).
+  * a plan change) and codegen compile count (non-zero on a timed rep
+  * means it recompiled instead of reusing the warm-up's classes).
   */
 object Time {
   def main(args: Array[String]): Unit = {
@@ -34,24 +35,26 @@ object Time {
       sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       spark.catalog.clearCache()
     }
-    def once(name: String): (Double, Long) = {
-      val j0 = drainedJobs()
+    def compiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def once(name: String): (Double, Long, Long) = {
+      val j0 = drainedJobs(); val c0 = compiles()
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, dir)
         .write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      val j1 = drainedJobs()
+      val j1 = drainedJobs(); val c1 = compiles()
       releaseResiduals()
       System.gc()
-      (dt, j1 - j0)
+      (dt, j1 - j0, c1 - c0)
     }
 
     args.foreach { name =>
       once(name) // warm-up: codegen/JIT/footer caches, uncounted
       val rs = (1 to reps).map { i =>
-        val (dt, j) = once(name)
-        println(f"TIMER $name rep=$i ${dt}%.2f s jobs=$j")
-        (dt, j)
+        val (dt, j, c) = once(name)
+        println(f"TIMER $name rep=$i ${dt}%.2f s jobs=$j compiles=$c")
+        (dt, j, c)
       }
       val sorted = rs.map(_._1).sorted
       val med =
@@ -59,7 +62,8 @@ object Time {
         else (sorted(reps / 2 - 1) + sorted(reps / 2)) / 2.0
       println(f"MEDIAN $name ${med}%.2f s " +
         f"min=${sorted.head}%.2f max=${sorted.last}%.2f " +
-        s"jobs=${rs.map(_._2).distinct.mkString("/")} reps=$reps")
+        s"jobs=${rs.map(_._2).distinct.mkString("/")} " +
+        s"compiles=${rs.map(_._3).distinct.mkString("/")} reps=$reps")
     }
     spark.stop()
   }

@@ -151,6 +151,19 @@ class Round8GateSemanticsSpec extends SparkTestBase {
         "comparison collapsed)")
   }
 
+  test("q305 on an empty graph returns no rows and leaves no pins behind") {
+    import spark.implicits._
+    // one part per order: no co-purchase pair, so the edge list is empty
+    val empty = tmpDir("graft-q305-empty")
+    Seq((1L, 10L), (2L, 11L)).toDF("l_orderkey", "l_partkey")
+      .write.parquet(s"$empty/lineitem.parquet")
+    val pinned0 = spark.sparkContext.getPersistentRDDs.keySet
+    val out = SparkEntry.queries("q305_louvain_phase1")(spark, empty)
+    assert(out.isEmpty)
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- pinned0
+    assert(left.isEmpty, s"q305 left ${left.size} checkpoint pins registered")
+  }
+
   test("q306 best match equals the window-argmax reformulation; JW is symmetric here") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
