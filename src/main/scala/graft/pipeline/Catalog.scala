@@ -12,6 +12,13 @@ import org.apache.spark.sql.functions.{broadcast, ceil, col, count, lit, pmod, s
   * pruning for the per-symbol analyst queries; at 100 TB the facts would
   * move to (symbol-bucket, month) composite partitioning so a single hot
   * symbol cannot produce an oversized partition.
+  *
+  * Every write except [[append]] ([[upsert]], [[overwrite]], [[compact]])
+  * is one atomic, versioned commit — the analog of a Delta commit: the new
+  * image is written to `<table>.staging`, then [[commit]] swaps it in by
+  * rename, archiving the outgoing entries as `<table>.pv<N>`, and [[heal]]
+  * rolls back a commit that died half-way. [[append]] writes into the live
+  * directory and does not version.
   */
 final class Catalog(spark: SparkSession, warehouseDir: String,
                     names: TableNames = TableNames(),
@@ -45,68 +52,39 @@ final class Catalog(spark: SparkSession, warehouseDir: String,
     }
   }
 
-  /** VERSIONED READS (the Delta `VERSION AS OF` analog on the rename-aside
-    * scheme): every swap-path commit (non-partitioned [[upsert]],
-    * [[compact]]) archives the outgoing table image as `<table>.v<N>`
-    * instead of deleting it, keeping the newest [[retainVersions]]
-    * snapshots. [[version]] numbers the LIVE image; `readAsOf(t, k)` for
-    * k < version reads snapshot `v<k>`, whose files are immutable from the
-    * moment they are archived — a reader pinned to k is byte-stable across
-    * any number of later upserts (CatalogUpsertSpec proves file-level
-    * identity). Reading a pruned (or never-committed) version fails
-    * loudly. In-place dynamic-partition overwrites do NOT version — file-
-    * granular history needs the manifest design, which is
-    * [[VersionedCatalog]]; this is the crash-safe rename-aside scheme's
-    * free by-product, matching what the reference pipeline actually uses
-    * Delta versions for (inspect the pre-merge image after a bad batch). */
+  /** VERSIONED READS (the Delta `VERSION AS OF` analog): the table's first
+    * write is version 1 and every [[commit]] adds one. [[version]] numbers
+    * the LIVE image. Version k of every entry resolves to a location — the
+    * live one if no commit after k touched it, else its pre-image in
+    * `<table>.pv<j>` for the SMALLEST j ≥ k that archived it (the entry was
+    * unchanged between k and j by construction); an entry first created
+    * after k is absent. Archived files are immutable from the moment they
+    * move, so a reader pinned to k is byte-stable across any number of
+    * later commits (CatalogUpsertSpec proves file-level identity). One
+    * parquet read per distinct root (live + each contributing archive,
+    * each with its own basePath so partition columns recover), unioned by
+    * name — at most retainVersions+1 scans of METADATA, and data files are
+    * shared, never copied. Reading a pruned or future version fails
+    * loudly. */
   def version(table: String): Long = {
     heal(table)
-    (archivedVersions(table) ++ committedPartitionArchives(table))
-      .maxOption.getOrElse(0L) + 1L
+    committedArchives(table).maxOption.getOrElse(0L) + 1L
   }
 
-  def readAsOf(table: String, asOfVersion: Long): DataFrame = {
-    heal(table)
-    if (committedPartitionArchives(table).nonEmpty)
-      readAsOfPartitioned(table, asOfVersion)
-    else {
-      val cur = archivedVersions(table).maxOption.getOrElse(0L) + 1L
-      if (asOfVersion == cur) readDir(table, path(table))
-      else {
-        require(asOfVersion < cur,
-          s"table $table is at version $cur; version $asOfVersion does not exist yet")
-        val snap = new java.io.File(s"${path(table)}.v$asOfVersion")
-        require(snap.exists(),
-          s"version $asOfVersion of $table was pruned (retainVersions=$retainVersions) " +
-            "or predates the first swap commit")
-        readDir(table, snap.getPath)
-      }
-    }
-  }
-
-  /** Versioned read on the PARTITIONED upsert path: version k of every
-    * partition is resolved to a directory — the live one if no commit
-    * after k touched it, else the pre-image from `<table>.pv<j>` for the
-    * SMALLEST j ≥ k that archived it (the partition was unchanged between
-    * k and j by construction); a partition first created after k is
-    * absent. One parquet read per distinct root (live + each contributing
-    * archive, each with its own basePath so partition columns recover),
-    * unioned by name — at most retainVersions+1 scans of METADATA, and
-    * data files are shared, never copied. */
-  private def readAsOfPartitioned(table: String, k: Long): DataFrame = {
-    val cur = committedPartitionArchives(table).maxOption.getOrElse(0L) + 1L
+  def readAsOf(table: String, k: Long): DataFrame = {
+    val cur = version(table)
     if (k == cur) readDir(table, path(table))
     else {
       require(k >= 1 && k < cur,
         s"table $table is at version $cur; version $k does not exist yet")
-      val have = committedPartitionArchives(table).toSet
+      val have = committedArchives(table).toSet
       val needed = (k until cur)
       require(needed.forall(have.contains),
         s"version $k of $table was pruned (retainVersions=$retainVersions): " +
           s"archives ${needed.filterNot(have.contains).mkString(",")} are gone")
-      // dir -> Some(root) (contributing image) | None (absent at k)
+      // entry -> Some(root) (contributing image) | None (absent at k)
       var m: Map[String, Option[String]] =
-        partitionDirs(new java.io.File(path(table)))
+        dataEntries(new java.io.File(path(table)))
           .map(d => d -> Option(path(table))).toMap
       needed.sorted(Ordering[Long].reverse).foreach { j =>
         val pv = archiveDir(table, j)
@@ -117,75 +95,24 @@ final class Catalog(spark: SparkSession, warehouseDir: String,
         }
       }
       // NOTE the .toSeq: collect on the Map would re-key by root and
-      // silently keep ONE partition per root
+      // silently keep ONE entry per root
       val byRoot = m.toSeq.collect { case (d, Some(root)) => (root, d) }
         .groupBy(_._1).map { case (root, ds) =>
           readDirs(table, root, ds.map(_._2).sorted.map(d => s"$root/$d"))
         }
-      require(byRoot.nonEmpty, s"version $k of $table resolved to no partitions")
-      byRoot.reduce(_.unionByName(_))
+      // a version with no entries (an empty overwrite) reads empty
+      if (byRoot.isEmpty) readDir(table, path(table)).where(lit(false))
+      else byRoot.reduce(_.unionByName(_))
     }
   }
 
-  private def archivedVersions(table: String): Seq[Long] = {
-    val prefix = s"$table.v"
-    Option(new java.io.File(warehouseDir).listFiles()).getOrElse(Array.empty)
-      .map(_.getName).filter(_.startsWith(prefix))
-      .flatMap(n => n.stripPrefix(prefix).toLongOption).toSeq
-  }
-
-  /** Crash recovery for the swap: the live directory is renamed ASIDE (to
-    * its archive slot `<table>.v<N>`) before staging is promoted, so a
-    * crash at any point leaves a complete copy of the data on disk. A
-    * missing live directory next to archived snapshots means the swap died
-    * between its two renames — the HIGHEST archive is the set-aside live
-    * image (the rename to `v<N>` and the promotion of staging are the only
-    * two steps between which the live dir is absent): restore it and drop
-    * whatever staging output the dead writer left behind. Runs on every
-    * read/exists/version/upsert so an interrupted writer never needs
-    * manual repair. */
-  private def heal(table: String): Unit = {
-    pheal(table) // partitioned-path rollback first: it never touches a
-                 // committed archive, and the swap heal below is disjoint
-    val dir = new java.io.File(path(table))
-    val legacy = new java.io.File(path(table) + ".old")
-    if (dir.exists()) {
-      // live dir + '.old' coexisting means the '.old' is a COMPLETED
-      // old-scheme swap's leftover (the pre-versioning swapIn only
-      // deleted it on the NEXT swap), not a crash image. Left alone it
-      // would linger forever — and if the live dir were ever lost with
-      // no v<N> archives, heal would silently restore that stale
-      // pre-upgrade image as live. Delete it here (every swap routes
-      // through heal via version(), so the first new-scheme commit
-      // retires it); after this, only a genuine old-scheme crash image
-      // (live dir absent) can ever be restored from '.old'.
-      if (legacy.exists()) delete(legacy)
-    } else {
-      // legacy set-aside name from before the versioned scheme: a
-      // warehouse that crashed mid-swap under the old Catalog must heal
-      // after an upgrade, not strand its data in `.old`
-      val aside = archivedVersions(table).maxOption
-        .map(v => new java.io.File(s"${path(table)}.v$v"))
-        .orElse(Option(legacy).filter(_.exists()))
-      aside.foreach { a =>
-        val staging = new java.io.File(path(table) + ".staging")
-        if (staging.exists()) delete(staging)
-        if (!a.renameTo(dir))
-          throw new java.io.IOException(s"cannot restore $table from ${a.getName}")
-      }
-    }
-  }
-
-  /** Test seam: invoked between the two renames of the non-partitioned
-    * upsert swap — the worst possible crash point. Tests inject a throw to
-    * simulate the JVM dying mid-swap. */
-  private[pipeline] var crashHook: () => Unit = () => ()
-
-  /** Full deterministic rewrite (reference silver/gold mode). */
+  /** Full deterministic rewrite (reference silver/gold mode), committed
+    * like any other write: atomic, versioned, crash-safe. */
   def overwrite(df: DataFrame, table: String, partitionBy: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*).parquet(path(table))
+    commit(table, stage(df, table, partitionBy), replaceAll = true)
 
-  /** Append (reference DQ mode). */
+  /** Append (reference DQ mode). The one write into the live directory:
+    * it does not version. */
   def append(df: DataFrame, table: String, partitionBy: Seq[String]): Unit =
     df.write.mode(SaveMode.Append).partitionBy(partitionBy: _*).parquet(path(table))
 
@@ -193,212 +120,39 @@ final class Catalog(spark: SparkSession, warehouseDir: String,
     * key collision (MERGE's UPDATE-all-columns), unmatched target rows are
     * kept, new keys insert.
     *
-    * Scale shape: when the table is partitioned, only the partitions the
-    * batch touches are read, merged, and rewritten (Spark's dynamic
-    * partition overwrite); a daily batch touching 4 of 10k symbol
-    * partitions rewrites 4 directories, not the table. The merge input is
-    * partition-pruned by an IN filter on the touched partition values, so
-    * the anti-join's target side never scans cold partitions.
+    * Scale shape: when the table is partitioned on a key column, only the
+    * partitions the batch touches are read, merged, staged and committed;
+    * a daily batch touching 4 of 10k symbol partitions rewrites 4
+    * directories, not the table. The merge input is partition-pruned by an
+    * IN filter on the touched partition values, so the anti-join's target
+    * side never scans cold partitions. Otherwise the merge restages the
+    * whole table. The staged plan reads the very files being replaced, so
+    * it is materialized to staging first and then PROMOTED BY RENAME, never
+    * rewritten.
     */
   def upsert(incoming: DataFrame, table: String, keys: Seq[String],
              partitionBy: Seq[String]): Unit = {
-    if (!exists(table)) {
-      incoming.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*).parquet(path(table))
-      return
-    }
+    if (!exists(table))
+      return commit(table, stage(incoming, table, partitionBy), replaceAll = true)
     val pcol = partitionBy.headOption.filter(keys.contains)
-    pcol match {
-      case Some(p) =>
-        // touched partition values: small by construction (one per symbol
-        // in the batch) — collected to drive partition pruning
-        val touched = incoming.select(incoming(p)).distinct().collect().map(_.get(0))
-        val target = read(table).filter(col(p).isin(touched: _*))
-        val staged = incoming.unionByName(
-          target.join(incoming.select(keys.map(incoming(_)): _*).distinct(), keys, "left_anti"))
-        // The staged plan reads the very files being replaced, so the
-        // merge is materialized to staging first — and then PROMOTED BY
-        // RENAME, never rewritten: the pre-round-14 flow re-wrote the
-        // staged bytes a second time through a dynamic-partition
-        // overwrite (a full extra data pass) and left no history. The
-        // rename commit is the same cost as the non-partitioned swap
-        // (directory moves) and makes the touched partitions' outgoing
-        // images the version-N archive for free — Delta-style time
-        // travel on the partitioned path (see [[commitPartitioned]]).
-        val stagingDir = new java.io.File(path(table) + ".staging")
-        staged.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*)
-          .parquet(stagingDir.getPath)
-        commitPartitioned(table, stagingDir)
-      case None =>
-        val target = read(table)
-        val staged = incoming.unionByName(
-          target.join(incoming.select(keys.map(incoming(_)): _*).distinct(), keys, "left_anti"))
-        val staging = new java.io.File(path(table) + ".staging")
-        staged.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*).parquet(staging.getPath)
-        swapIn(staging, table)
+    val target = pcol.fold(read(table)) { p =>
+      // touched partition values: small by construction (one per symbol
+      // in the batch) — collected to drive partition pruning
+      val touched = incoming.select(incoming(p)).distinct().collect().map(_.get(0))
+      read(table).filter(col(p).isin(touched: _*))
     }
-  }
-
-  /** Atomic-enough swap with no window where the data exists nowhere: set
-    * the live directory aside INTO ITS ARCHIVE SLOT (`<table>.v<N>` — the
-    * rename that used to target `.old` now IS the version archive), promote
-    * staging, then prune archives beyond [[retainVersions]]. A crash
-    * between any two steps leaves either the original (heal restores it
-    * from the highest archive) or the fully-written new table — never a
-    * lost table, which a delete-then-rename would have as its failure
-    * mode. */
-  private def swapIn(staging: java.io.File, table: String): Unit = {
-    val dir = new java.io.File(path(table))
-    val aside = new java.io.File(s"${path(table)}.v${version(table)}")
-    if (!dir.renameTo(aside))
-      throw new java.io.IOException(s"cannot set aside $dir for swap")
-    crashHook() // a simulated crash leaves on-disk state exactly as a real one
-    if (!staging.renameTo(dir)) {
-      heal(table) // restore the original before failing
-      throw new java.io.IOException(s"staging rename failed for $table; original restored")
-    }
-    archivedVersions(table).sorted.dropRight(retainVersions).foreach { v =>
-      delete(new java.io.File(s"${path(table)}.v$v"))
-    }
-  }
-
-  // ---- partitioned versioning (the Delta-bronze time-travel analog) ----
-  //
-  // The non-partitioned swap versions whole-table images; an in-place
-  // dynamic-partition overwrite cannot (it mutates the live dir). The
-  // partitioned upsert therefore commits BY RENAME at top-level-partition
-  // granularity: the outgoing image of every touched partition directory
-  // is renamed into the archive `<table>.pv<N>/<dir>` and the staged
-  // replacement renamed into the live table. Untouched partitions are
-  // never moved or rewritten, so version N's archive holds exactly the
-  // partitions version N changed — file-granular history with zero data
-  // copy, the reference's Delta MERGE history on its partitioned bronze
-  // (reference notebooks/bronze/01_ingest_bronze.py:85-107) re-expressed
-  // as directory generations.
-  //
-  // Commit protocol (every step crash-safe; [[pheal]] is the recovery):
-  //   1. `_touched` (all staged partition dir names) and `_fresh` (the
-  //      subset with no live pre-image) are written DURABLY into the new
-  //      archive before anything moves — with them a dead writer's
-  //      half-commit is mechanically reversible;
-  //   2. every touched live dir renames into the archive (pre-images);
-  //   3. every staged dir renames into the live table;
-  //   4. `_committed` marker (atomic create) seals version N;
-  //   5. archives beyond [[retainVersions]] prune.
-  // A crash before 4 leaves no `_committed`: pheal restores archived
-  // pre-images, deletes uncommitted fresh partitions, and drops the
-  // half-archive — the table is bit-exactly at version N−1 again.
-  // Because step 2 fully precedes step 3, a touched dir absent from the
-  // half-archive can only be the UNMOVED original (or a fresh one listed
-  // in `_fresh`), so rollback never guesses.
-  private def archiveDir(table: String, n: Long) =
-    new java.io.File(s"${path(table)}.pv$n")
-
-  private def partitionArchives(table: String): Seq[Long] = {
-    val prefix = s"$table.pv"
-    Option(new java.io.File(warehouseDir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith(prefix))
-      .flatMap(f => f.getName.stripPrefix(prefix).toLongOption).toSeq
-  }
-
-  private def committedPartitionArchives(table: String): Seq[Long] =
-    partitionArchives(table)
-      .filter(n => new java.io.File(archiveDir(table, n), "_committed").exists())
-
-  private def partitionDirs(root: java.io.File): Seq[String] =
-    Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.contains("="))
-      .map(_.getName).toSeq.sorted
-
-  private def readLines(f: java.io.File): Seq[String] =
-    new String(java.nio.file.Files.readAllBytes(f.toPath))
-      .linesIterator.filter(_.nonEmpty).toSeq
-
-  private def writeLinesAtomic(f: java.io.File, lines: Seq[String]): Unit = {
-    val tmp = new java.io.File(f.getParentFile, f.getName + ".tmp")
-    java.nio.file.Files.write(tmp.toPath, lines.mkString("\n").getBytes)
-    java.nio.file.Files.move(tmp.toPath, f.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** Roll back any UNCOMMITTED partition archive (a writer that died
-    * mid-[[commitPartitioned]]): restore archived pre-images, delete
-    * fresh partitions the dead writer had already promoted, drop the
-    * half-archive and its staging. Committed archives are immutable and
-    * never touched. */
-  private def pheal(table: String): Unit =
-    partitionArchives(table).sorted(Ordering[Long].reverse).foreach { n =>
-      val pv = archiveDir(table, n)
-      if (!new java.io.File(pv, "_committed").exists()) {
-        val touchedF = new java.io.File(pv, "_touched")
-        if (touchedF.exists()) {
-          val fresh = {
-            val f = new java.io.File(pv, "_fresh")
-            if (f.exists()) readLines(f).toSet else Set.empty[String]
-          }
-          readLines(touchedF).foreach { d =>
-            val live = new java.io.File(path(table), d)
-            val arch = new java.io.File(pv, d)
-            if (arch.exists()) {
-              // pre-image archived: whatever sits live for d is the dead
-              // writer's promotion (or nothing) — replace with the original
-              if (live.exists()) delete(live)
-              if (!arch.renameTo(live))
-                throw new java.io.IOException(
-                  s"cannot roll back $table/$d from ${pv.getName}")
-            } else if (fresh.contains(d)) {
-              // no pre-image ever existed: drop the uncommitted partition
-              if (live.exists()) delete(live)
-            }
-            // else: archive rename for d never ran, so (step order) no
-            // promotion ran either — the live dir IS the original; keep it
-          }
-        }
-        delete(pv)
-        val staging = new java.io.File(path(table) + ".staging")
-        if (staging.exists()) delete(staging)
-      }
-    }
-
-  /** Steps 1-5 of the partitioned commit protocol above: `staging` holds
-    * the fully-written merged content of every touched partition. */
-  private def commitPartitioned(table: String, staging: java.io.File): Unit = {
-    val live = new java.io.File(path(table))
-    val touched = partitionDirs(staging)
-    require(touched.nonEmpty,
-      s"partitioned commit for $table found no partition dirs in staging")
-    val n = committedPartitionArchives(table).maxOption.getOrElse(0L) + 1L
-    val pv = archiveDir(table, n)
-    if (!pv.mkdirs())
-      throw new java.io.IOException(s"cannot create archive ${pv.getName}")
-    val fresh = touched.filterNot(d => new java.io.File(live, d).exists())
-    writeLinesAtomic(new java.io.File(pv, "_touched"), touched)
-    writeLinesAtomic(new java.io.File(pv, "_fresh"), fresh)
-    touched.foreach { d =>
-      val src = new java.io.File(live, d)
-      if (src.exists() && !src.renameTo(new java.io.File(pv, d)))
-        throw new java.io.IOException(s"cannot archive $table/$d to ${pv.getName}")
-    }
-    crashHook() // worst window: pre-images aside, nothing promoted yet
-    touched.foreach { d =>
-      val dst = new java.io.File(live, d)
-      if (dst.exists()) delete(dst) // a retried promotion after a crash
-      if (!new java.io.File(staging, d).renameTo(dst))
-        throw new java.io.IOException(s"cannot promote $table/$d from staging")
-    }
-    if (!new java.io.File(pv, "_committed").createNewFile())
-      throw new java.io.IOException(s"cannot seal ${pv.getName}")
-    delete(staging)
-    committedPartitionArchives(table).sorted.dropRight(retainVersions)
-      .foreach(v => delete(archiveDir(table, v)))
+    val merged = incoming.unionByName(
+      target.join(incoming.select(keys.map(incoming(_)): _*).distinct(), keys, "left_anti"))
+    commit(table, stage(merged, table, partitionBy), replaceAll = pcol.isEmpty)
   }
 
   /** OPTIMIZE-style compaction: rewrite the table into
     * `ceil(rows / targetRowsPerFile)` files per partition directory,
     * preserving every row. Streaming appends and per-batch upserts accrete
     * small files until scan planning is dominated by file metadata, not
-    * bytes — the operational fix is a periodic rewrite, done here through
-    * the same crash-safe staging swap as the upsert, so a compaction that
-    * dies mid-flight never loses the table.
+    * bytes — the operational fix is a periodic rewrite, committed like the
+    * upsert, so a compaction that dies mid-flight never loses the table
+    * and the pre-compaction image stays readable by version.
     *
     * Scale shape: one sizing aggregate (per-partition row counts — one
     * output row per partition DIRECTORY, the same bounded collect as the
@@ -434,17 +188,163 @@ final class Catalog(spark: SparkSession, warehouseDir: String,
         current.repartition(
           math.max(1, math.ceil(rows.toDouble / targetRowsPerFile).toInt))
       }
+    commit(table, stage(reshaped, table, partitionBy), replaceAll = true)
+  }
+
+  // ---- the commit protocol ----
+  //
+  // The unit of commit is a top-level DATA ENTRY of the table directory: a
+  // `k=v` partition directory, or a data file of an unpartitioned table (a
+  // file's hidden `.crc` sidecar moves with it). A commit replaces either
+  // the entries it staged (a partitioned upsert) or every live entry
+  // (overwrite, compaction, an unpartitioned upsert). The outgoing image of
+  // every replaced entry is renamed into the archive `<table>.pv<N>` and
+  // the staged entries renamed into the live table. Unreplaced entries are
+  // never moved or rewritten, so version N's archive holds exactly what
+  // version N+1 changed — history with zero data copy, the reference's
+  // Delta history on its tables (reference
+  // notebooks/bronze/01_ingest_bronze.py:85-107) re-expressed as
+  // directory generations. The first write to an absent table is staged
+  // and renamed into place whole.
+  //
+  // Protocol (every step crash-safe; [[heal]] is the recovery):
+  //   1. `_touched` (every entry the commit replaces or adds) and `_fresh`
+  //      (the subset with no live pre-image) are written DURABLY into the
+  //      new archive before anything moves — with them a dead writer's
+  //      half-commit is mechanically reversible;
+  //   2. every touched live entry renames into the archive (pre-images);
+  //   3. every staged entry renames into the live table;
+  //   4. `_committed` marker (atomic create) seals `pv<N>`: version N+1
+  //      is live;
+  //   5. archives beyond [[retainVersions]] prune.
+  // A crash before 4 leaves no `_committed`: heal restores archived
+  // pre-images, deletes uncommitted fresh entries, and drops the
+  // half-archive — the table is bit-exactly at version N again. Because
+  // step 2 fully precedes step 3, a touched entry absent from the
+  // half-archive can only be the UNMOVED original (or a fresh one listed
+  // in `_fresh`), so rollback never guesses.
+
+  /** Test seam: invoked in the commit's worst window — every pre-image
+    * archived, nothing promoted. Tests inject a throw to simulate the JVM
+    * dying mid-commit. */
+  private[pipeline] var crashHook: () => Unit = () => ()
+
+  /** Writes `df` as the table's staged image (after rolling back any
+    * half-commit, so the commit below numbers and archives against a
+    * committed table). */
+  private def stage(df: DataFrame, table: String, partitionBy: Seq[String]): java.io.File = {
+    heal(table)
     val staging = new java.io.File(path(table) + ".staging")
-    reshaped.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionBy: _*).parquet(staging.getPath)
-    // a PARTITIONED table commits through the partitioned protocol, so
-    // compaction preserves per-partition history exactly like an upsert
-    // (pre-images archive to pv<N>, readAsOf keeps working) — routing it
-    // through the whole-table swap would write a `.v<N>` archive the
-    // partitioned readAsOf dispatcher never consults, silently breaking
-    // version numbering for any table that mixes upserts and compaction
-    if (partitionBy.nonEmpty) commitPartitioned(table, staging)
-    else swapIn(staging, table)
+    df.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*).parquet(staging.getPath)
+    staging
+  }
+
+  /** Steps 1-5 of the protocol above: `staging` holds the fully-written
+    * new content of every entry it lists. */
+  private def commit(table: String, staging: java.io.File, replaceAll: Boolean): Unit = {
+    val live = new java.io.File(path(table))
+    if (!live.exists()) {
+      if (!staging.renameTo(live))
+        throw new java.io.IOException(s"cannot create $table from staging")
+      return
+    }
+    val staged = dataEntries(staging)
+    val touched = if (replaceAll) (staged ++ dataEntries(live)).distinct.sorted else staged
+    val n = committedArchives(table).maxOption.getOrElse(0L) + 1L
+    val pv = archiveDir(table, n)
+    if (!pv.mkdirs())
+      throw new java.io.IOException(s"cannot create archive ${pv.getName}")
+    writeLinesAtomic(new java.io.File(pv, "_touched"), touched)
+    writeLinesAtomic(new java.io.File(pv, "_fresh"),
+      touched.filterNot(d => new java.io.File(live, d).exists()))
+    touched.foreach(d => if (new java.io.File(live, d).exists()) move(live, pv, d))
+    crashHook() // a simulated crash leaves on-disk state exactly as a real one
+    staged.foreach(move(staging, live, _))
+    if (!new java.io.File(pv, "_committed").createNewFile())
+      throw new java.io.IOException(s"cannot seal ${pv.getName}")
+    delete(staging)
+    committedArchives(table).sorted.dropRight(retainVersions)
+      .foreach(v => delete(archiveDir(table, v)))
+  }
+
+  /** Roll back any UNCOMMITTED archive (a writer that died mid-[[commit]]):
+    * restore archived pre-images, delete fresh entries the dead writer had
+    * already promoted, drop the half-archive and its staging. Committed
+    * archives are immutable and never touched. Runs on every
+    * read/exists/version/write so an interrupted writer never needs manual
+    * repair. */
+  private def heal(table: String): Unit =
+    archives(table).sorted(Ordering[Long].reverse).foreach { n =>
+      val pv = archiveDir(table, n)
+      if (!new java.io.File(pv, "_committed").exists()) {
+        val live = new java.io.File(path(table))
+        val touchedF = new java.io.File(pv, "_touched")
+        if (touchedF.exists()) {
+          val fresh = {
+            val f = new java.io.File(pv, "_fresh")
+            if (f.exists()) readLines(f).toSet else Set.empty[String]
+          }
+          readLines(touchedF).foreach { d =>
+            if (new java.io.File(pv, d).exists()) {
+              // pre-image archived: whatever sits live for d is the dead
+              // writer's promotion (or nothing) — replace with the original
+              deleteEntry(live, d)
+              move(pv, live, d)
+            } else if (fresh.contains(d)) {
+              // no pre-image ever existed: drop the uncommitted entry
+              deleteEntry(live, d)
+            }
+            // else: archive rename for d never ran, so (step order) no
+            // promotion ran either — the live entry IS the original; keep it
+          }
+        }
+        delete(pv)
+        val staging = new java.io.File(path(table) + ".staging")
+        if (staging.exists()) delete(staging)
+      }
+    }
+
+  private def archiveDir(table: String, n: Long) =
+    new java.io.File(s"${path(table)}.pv$n")
+
+  private def archives(table: String): Seq[Long] = {
+    val prefix = s"$table.pv"
+    Option(new java.io.File(warehouseDir).listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isDirectory && f.getName.startsWith(prefix))
+      .flatMap(f => f.getName.stripPrefix(prefix).toLongOption).toSeq
+  }
+
+  private def committedArchives(table: String): Seq[Long] =
+    archives(table).filter(n => new java.io.File(archiveDir(table, n), "_committed").exists())
+
+  /** The commit's units under `root`. Names starting with `_` or `.`
+    * (`_SUCCESS`, checksum sidecars) are metadata Spark never reads. */
+  private def dataEntries(root: java.io.File): Seq[String] =
+    Option(root.list()).getOrElse(Array.empty)
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSeq.sorted
+
+  /** An entry with its hidden `.crc` sidecar, if it has one. */
+  private def withSidecar(d: String): Seq[String] = Seq(d, s".$d.crc")
+
+  private def move(from: java.io.File, to: java.io.File, d: String): Unit =
+    withSidecar(d).foreach { n =>
+      val src = new java.io.File(from, n)
+      if (src.exists() && !src.renameTo(new java.io.File(to, n)))
+        throw new java.io.IOException(s"cannot move $n from ${from.getName} to ${to.getName}")
+    }
+
+  private def deleteEntry(dir: java.io.File, d: String): Unit =
+    withSidecar(d).foreach(n => delete(new java.io.File(dir, n)))
+
+  private def readLines(f: java.io.File): Seq[String] =
+    new String(java.nio.file.Files.readAllBytes(f.toPath))
+      .linesIterator.filter(_.nonEmpty).toSeq
+
+  private def writeLinesAtomic(f: java.io.File, lines: Seq[String]): Unit = {
+    val tmp = new java.io.File(f.getParentFile, f.getName + ".tmp")
+    java.nio.file.Files.write(tmp.toPath, lines.mkString("\n").getBytes)
+    java.nio.file.Files.move(tmp.toPath, f.toPath,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
   private def delete(f: java.io.File): Unit = {

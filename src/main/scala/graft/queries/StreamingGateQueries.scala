@@ -528,32 +528,26 @@ object StreamingGateQueries extends QueryModule {
         .otherwise(2))
       .groupBy($"user_id", $"event_type", $"b")
       .agg(min($"tsu").as("tsu"))
-    val staged = java.nio.file.Files
-      .createTempDirectory("graft_q329_").toString
-    stageOrderedBatches(
-      keyrows.select($"user_id", $"event_type", $"tsu", $"b"),
-      staged, "b", 3)
-    val schema = s.read.parquet(s"$staged/batch0000.parquet").schema
-    val out = graft.streaming.StreamHarness.runToTable(
-      s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$staged/[b]atch*.parquet")
-        .select($"user_id", $"event_type",
-          timestamp_micros($"tsu").as("ets"))
-        .withWatermark("ets", "1 hour")
-        .dropDuplicatesWithinWatermark("user_id", "event_type"),
-      "q329_sink_", OutputMode.Append(), noDataBatches = false)
-    // the memory sink retains the results — drop the throwaway staging
-    // tree so repeated gate runs don't accumulate parquet dirs (q325's
-    // discipline)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
+    graft.pipeline.Staging.withStagedDir("graft_q329_") { staged =>
+      stageOrderedBatches(
+        keyrows.select($"user_id", $"event_type", $"tsu", $"b"),
+        staged, "b", 3)
+      val schema = s.read.parquet(s"$staged/batch0000.parquet").schema
+      val out = graft.streaming.StreamHarness.runToTable(
+        s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1")
+          .parquet(s"$staged/[b]atch*.parquet")
+          .select($"user_id", $"event_type",
+            timestamp_micros($"tsu").as("ets"))
+          .withWatermark("ets", "1 hour")
+          .dropDuplicatesWithinWatermark("user_id", "event_type"),
+        "q329_sink_", OutputMode.Append(), noDataBatches = false)
+      // the memory sink retains the results, so the staging tree can go
+      // when this block exits, on success or failure
+      out
+        .select($"user_id", $"event_type", unix_micros($"ets").as("ts_us"))
+        .orderBy($"user_id", $"event_type", $"ts_us")
     }
-    rm(new java.io.File(staged))
-    out
-      .select($"user_id", $"event_type", unix_micros($"ets").as("ts_us"))
-      .orderBy($"user_id", $"event_type", $"ts_us")
   }
   private val q329Sql =
     """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS tsu
@@ -684,34 +678,29 @@ object StreamingGateQueries extends QueryModule {
         .otherwise(2))
       .groupBy($"user_id", $"event_type", $"b")
       .agg(min($"tsu").as("tsu"))
-    val staged = java.nio.file.Files
-      .createTempDirectory("graft_q336_").toString
-    stageOrderedBatches(
-      keyrows.select($"user_id", $"event_type", $"tsu", $"b"),
-      staged, "b", 3)
-    val schema = s.read.parquet(s"$staged/batch0000.parquet").schema
-    val out = graft.streaming.StreamHarness.runToTable(
-      s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$staged/[b]atch*.parquet")
-        .select($"user_id", $"event_type",
-          timestamp_micros($"tsu").as("ets"))
-        .withWatermark("ets", "1 hour")
-        .dropDuplicatesWithinWatermark("user_id", "event_type")
-        .groupBy(window($"ets", "6 hours").as("w6"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(when($"event_type" === "purchase", 1L).otherwise(0L))
-            .as("n_purchases")),
-      "q336_sink_", OutputMode.Append())
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
+    graft.pipeline.Staging.withStagedDir("graft_q336_") { staged =>
+      stageOrderedBatches(
+        keyrows.select($"user_id", $"event_type", $"tsu", $"b"),
+        staged, "b", 3)
+      val schema = s.read.parquet(s"$staged/batch0000.parquet").schema
+      val out = graft.streaming.StreamHarness.runToTable(
+        s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1")
+          .parquet(s"$staged/[b]atch*.parquet")
+          .select($"user_id", $"event_type",
+            timestamp_micros($"tsu").as("ets"))
+          .withWatermark("ets", "1 hour")
+          .dropDuplicatesWithinWatermark("user_id", "event_type")
+          .groupBy(window($"ets", "6 hours").as("w6"))
+          .agg(count(lit(1)).as("n_rows"),
+            sum(when($"event_type" === "purchase", 1L).otherwise(0L))
+              .as("n_purchases")),
+        "q336_sink_", OutputMode.Append())
+      out
+        .select(unix_micros($"w6.start").as("window_start_us"),
+          $"n_rows", $"n_purchases")
+        .orderBy($"window_start_us")
     }
-    rm(new java.io.File(staged))
-    out
-      .select(unix_micros($"w6.start").as("window_start_us"),
-        $"n_rows", $"n_purchases")
-      .orderBy($"window_start_us")
   }
   private val q336Sql =
     """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS tsu
@@ -810,30 +799,25 @@ object StreamingGateQueries extends QueryModule {
           s"watermark ${seenMax - GapMs} — a staged row would be dropped")
       math.max(seenMax, mxB)
     }
-    val staged = java.nio.file.Files
-      .createTempDirectory("graft_q337_").toString
-    stageOrderedBatches(rows.select($"user_id", $"tsm", $"ord"),
-      staged, "ord", 7)
-    val schema = s.read.parquet(s"$staged/batch0000.parquet").schema
-    val events = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staged/[b]atch*.parquet")
-      .select($"user_id", timestamp_millis($"tsm").as("ts"),
-        lit("e").as("event_type"), lit(0.0).as("value"))
-      .as[graft.streaming.StreamingOps.Event]
-    val out = graft.streaming.StreamHarness.runToTable(
-      graft.streaming.StreamingOps.sessionize(events, gapSeconds = 3L * 86400L)
-        .toDF(),
-      "q337_sink_", OutputMode.Append())
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
+    graft.pipeline.Staging.withStagedDir("graft_q337_") { staged =>
+      stageOrderedBatches(rows.select($"user_id", $"tsm", $"ord"),
+        staged, "ord", 7)
+      val schema = s.read.parquet(s"$staged/batch0000.parquet").schema
+      val events = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(s"$staged/[b]atch*.parquet")
+        .select($"user_id", timestamp_millis($"tsm").as("ts"),
+          lit("e").as("event_type"), lit(0.0).as("value"))
+        .as[graft.streaming.StreamingOps.Event]
+      val out = graft.streaming.StreamHarness.runToTable(
+        graft.streaming.StreamingOps.sessionize(events, gapSeconds = 3L * 86400L)
+          .toDF(),
+        "q337_sink_", OutputMode.Append())
+      out
+        .select($"user_id", unix_millis($"session_start").as("start_ms"),
+          unix_millis($"session_end").as("end_ms"), $"n_events")
+        .orderBy($"user_id", $"start_ms")
     }
-    rm(new java.io.File(staged))
-    out
-      .select($"user_id", unix_millis($"session_start").as("start_ms"),
-        unix_millis($"session_end").as("end_ms"), $"n_events")
-      .orderBy($"user_id", $"start_ms")
   }
   private val q337Sql =
     """WITH e AS (SELECT user_id, epoch_ms(ts) AS tsm FROM events),

@@ -882,33 +882,27 @@ object WarehouseQueries extends QueryModule {
     * the catalog adds manifest reads only (file-count-sized, not
     * row-sized). The result is materialized eagerly so the throwaway
     * warehouse can be deleted before returning. */
-  private def q325(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft_vc_q325_")
-    val vc = new graft.pipeline.VersionedCatalog(s, wh.toString)
-    val o = Tables.orders(s, dir)
-    def snap(lo: String, hi: String): DataFrame =
-      o.filter($"o_orderdate" >= lit(java.sql.Timestamp.valueOf(lo)) &&
-          $"o_orderdate" < lit(java.sql.Timestamp.valueOf(hi)))
-        .groupBy($"o_custkey".as("custkey"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
-    val c1 = vc.publish(Map("cust_agg" ->
-      snap("1994-01-01 00:00:00", "1996-01-01 00:00:00")))
-    val c2 = vc.publish(Map("cust_agg" ->
-      snap("1995-01-01 00:00:00", "1997-01-01 00:00:00")))
-    val out = graft.pipeline.TableDiff.diff(
-        vc.read("cust_agg", c1), vc.read("cust_agg", c2),
-        keyCols = Seq("custkey"), compareCols = Seq("n_orders", "cents"))
-      .orderBy($"custkey")
-      .localCheckpoint(true) // pin before the warehouse disappears
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
+  private def q325(s: SparkSession, dir: String): DataFrame =
+    graft.pipeline.Staging.withStagedDir("graft_vc_q325_") { wh =>
+      import s.implicits._
+      val vc = new graft.pipeline.VersionedCatalog(s, wh)
+      val o = Tables.orders(s, dir)
+      def snap(lo: String, hi: String): DataFrame =
+        o.filter($"o_orderdate" >= lit(java.sql.Timestamp.valueOf(lo)) &&
+            $"o_orderdate" < lit(java.sql.Timestamp.valueOf(hi)))
+          .groupBy($"o_custkey".as("custkey"))
+          .agg(count(lit(1)).as("n_orders"),
+            sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
+      val c1 = vc.publish(Map("cust_agg" ->
+        snap("1994-01-01 00:00:00", "1996-01-01 00:00:00")))
+      val c2 = vc.publish(Map("cust_agg" ->
+        snap("1995-01-01 00:00:00", "1997-01-01 00:00:00")))
+      graft.pipeline.TableDiff.diff(
+          vc.read("cust_agg", c1), vc.read("cust_agg", c2),
+          keyCols = Seq("custkey"), compareCols = Seq("n_orders", "cents"))
+        .orderBy($"custkey")
+        .localCheckpoint(true) // pin before the warehouse disappears
     }
-    rm(wh.toFile)
-    out
-  }
   private val q325Sql =
     """WITH o1 AS (SELECT o_custkey AS custkey,
       |    CAST(count(*) AS BIGINT) AS n_orders,
@@ -937,8 +931,8 @@ object WarehouseQueries extends QueryModule {
       |ORDER BY custkey""".stripMargin
 
   /** q364: CATALOG VERSIONED READ (`VERSION AS OF` on the MERGE-emulating
-    * [[graft.pipeline.Catalog]]) — the rename-aside swap now archives the
-    * outgoing table image instead of deleting it, and this gate puts that
+    * [[graft.pipeline.Catalog]]) — every commit archives the outgoing
+    * table entries instead of deleting them, and this gate puts that
     * read path under the DuckDB hash: a throwaway warehouse takes two
     * non-partitioned upserts of a per-customer aggregate (v1 = pre-1996
     * orders; the incoming batch = 1996+ orders, which UPDATES colliding
@@ -955,36 +949,30 @@ object WarehouseQueries extends QueryModule {
     * two 1-row summaries; versioning itself adds only directory renames —
     * no data copy at any size. Cents are exact BIGINT (engine-wide money
     * idiom). Result is pinned eagerly so the warehouse can be deleted. */
-  private def q364(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft_cat_q364_")
-    val cat = new graft.pipeline.Catalog(s, wh.toString)
-    val o = Tables.orders(s, dir)
-    val split = lit(java.sql.Timestamp.valueOf("1996-01-01 00:00:00"))
-    def img(pred: org.apache.spark.sql.Column): DataFrame =
-      o.filter(pred)
-        .groupBy($"o_custkey".as("custkey"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
-    cat.upsert(img($"o_orderdate" < split), "cust_agg",
-      keys = Seq("custkey"), partitionBy = Seq.empty)
-    cat.upsert(img($"o_orderdate" >= split), "cust_agg",
-      keys = Seq("custkey"), partitionBy = Seq.empty)
-    def summarize(v: Long): DataFrame =
-      cat.readAsOf("cust_agg", v)
-        .agg(count(lit(1)).as("n_keys"),
-          sum($"n_orders").as("sum_orders"),
-          sum($"cents").as("sum_cents"))
-        .select(lit(v).as("version"), col("*"))
-    val out = summarize(1).unionAll(summarize(2)).orderBy($"version")
-      .localCheckpoint(true) // pin before the warehouse disappears
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
+  private def q364(s: SparkSession, dir: String): DataFrame =
+    graft.pipeline.Staging.withStagedDir("graft_cat_q364_") { wh =>
+      import s.implicits._
+      val cat = new graft.pipeline.Catalog(s, wh)
+      val o = Tables.orders(s, dir)
+      val split = lit(java.sql.Timestamp.valueOf("1996-01-01 00:00:00"))
+      def img(pred: org.apache.spark.sql.Column): DataFrame =
+        o.filter(pred)
+          .groupBy($"o_custkey".as("custkey"))
+          .agg(count(lit(1)).as("n_orders"),
+            sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
+      cat.upsert(img($"o_orderdate" < split), "cust_agg",
+        keys = Seq("custkey"), partitionBy = Seq.empty)
+      cat.upsert(img($"o_orderdate" >= split), "cust_agg",
+        keys = Seq("custkey"), partitionBy = Seq.empty)
+      def summarize(v: Long): DataFrame =
+        cat.readAsOf("cust_agg", v)
+          .agg(count(lit(1)).as("n_keys"),
+            sum($"n_orders").as("sum_orders"),
+            sum($"cents").as("sum_cents"))
+          .select(lit(v).as("version"), col("*"))
+      summarize(1).unionAll(summarize(2)).orderBy($"version")
+        .localCheckpoint(true) // pin before the warehouse disappears
     }
-    rm(wh.toFile)
-    out
-  }
   /** q365: PARTITIONED VERSIONED READ — the Delta-bronze time-travel
     * analog on the dynamic-partition upsert path (the reference MERGEs
     * into a symbol-partitioned Delta bronze and can read any prior
@@ -1006,39 +994,33 @@ object WarehouseQueries extends QueryModule {
     * no data copy at any size — and the versioned read is one metadata
     * scan per contributing root (≤ retainVersions+1), with data files
     * shared between versions, never duplicated. */
-  private def q365(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft_cat_q365_")
-    val cat = new graft.pipeline.Catalog(s, wh.toString)
-    val o = Tables.orders(s, dir)
-    val split = lit(java.sql.Timestamp.valueOf("1996-01-01 00:00:00"))
-    def img(d: DataFrame): DataFrame =
-      d.groupBy($"o_orderstatus".as("status"), $"o_custkey".as("custkey"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(org.apache.spark.sql.functions.round($"o_totalprice" * 100)
-            .cast("long")).as("cents"))
-    cat.upsert(img(o.filter($"o_orderdate" < split)), "status_agg",
-      keys = Seq("status", "custkey"), partitionBy = Seq("status"))
-    cat.upsert(
-      img(o.filter($"o_orderdate" >= split && $"o_orderstatus" === "O")),
-      "status_agg", keys = Seq("status", "custkey"), partitionBy = Seq("status"))
-    def summarize(v: Long): DataFrame =
-      cat.readAsOf("status_agg", v)
-        .groupBy($"status")
-        .agg(count(lit(1)).as("n_keys"),
-          sum($"n_orders").as("sum_orders"),
-          sum($"cents").as("sum_cents"))
-        .select(lit(v).as("version"), col("*"))
-    val out = summarize(1).unionAll(summarize(2))
-      .orderBy($"version", $"status")
-      .localCheckpoint(true) // pin before the warehouse disappears
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
+  private def q365(s: SparkSession, dir: String): DataFrame =
+    graft.pipeline.Staging.withStagedDir("graft_cat_q365_") { wh =>
+      import s.implicits._
+      val cat = new graft.pipeline.Catalog(s, wh)
+      val o = Tables.orders(s, dir)
+      val split = lit(java.sql.Timestamp.valueOf("1996-01-01 00:00:00"))
+      def img(d: DataFrame): DataFrame =
+        d.groupBy($"o_orderstatus".as("status"), $"o_custkey".as("custkey"))
+          .agg(count(lit(1)).as("n_orders"),
+            sum(org.apache.spark.sql.functions.round($"o_totalprice" * 100)
+              .cast("long")).as("cents"))
+      cat.upsert(img(o.filter($"o_orderdate" < split)), "status_agg",
+        keys = Seq("status", "custkey"), partitionBy = Seq("status"))
+      cat.upsert(
+        img(o.filter($"o_orderdate" >= split && $"o_orderstatus" === "O")),
+        "status_agg", keys = Seq("status", "custkey"), partitionBy = Seq("status"))
+      def summarize(v: Long): DataFrame =
+        cat.readAsOf("status_agg", v)
+          .groupBy($"status")
+          .agg(count(lit(1)).as("n_keys"),
+            sum($"n_orders").as("sum_orders"),
+            sum($"cents").as("sum_cents"))
+          .select(lit(v).as("version"), col("*"))
+      summarize(1).unionAll(summarize(2))
+        .orderBy($"version", $"status")
+        .localCheckpoint(true) // pin before the warehouse disappears
     }
-    rm(wh.toFile)
-    out
-  }
   private val q365Sql =
     """WITH v1 AS (SELECT o_orderstatus AS status, o_custkey AS custkey,
       |    CAST(count(*) AS BIGINT) AS n_orders,

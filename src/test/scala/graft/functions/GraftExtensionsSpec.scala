@@ -58,4 +58,11 @@ class GraftExtensionsSpec extends AnyFunSuite {
       .head.getSeq[Long](0)
     assert(g == Seq(10L, 14L, 20L))
   }
+
+  test("array_dot from SQL text checks its arity") {
+    val e = intercept[Exception] {
+      spark.sql("SELECT array_dot(array(1.0d, 2.0d)) AS d").collect()
+    }
+    assert(e.getMessage.contains("array_dot(a, b) takes exactly 2 arguments"))
+  }
 }

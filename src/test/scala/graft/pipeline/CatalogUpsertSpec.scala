@@ -100,14 +100,14 @@ class CatalogUpsertSpec extends SparkTestBase {
     val catalog = new Catalog(spark, wh)
     val t = Schemas.tables.bronze
     // non-partitioned layout (partitionBy does not include a key column's
-    // partition head) -> the rename-swap path under test
+    // partition head) -> the commit replaces every live file
     catalog.upsert(df(
       mkRow("AAA", "2026-01-01", 10.0, "2026-01-02 00:00:00"),
       mkRow("BBB", "2026-01-01", 20.0, "2026-01-02 00:00:00")),
       t, keys = Seq("symbol", "date"), partitionBy = Seq.empty)
     assert(catalog.read(t).count() == 2)
 
-    // die at the worst point: live directory set aside, staging not yet
+    // die at the worst point: every live file archived, staging not yet
     // promoted — the exact window where delete-then-rename lost the table
     catalog.crashHook = () => throw new RuntimeException("simulated crash")
     val crashed = intercept[RuntimeException] {
@@ -116,11 +116,13 @@ class CatalogUpsertSpec extends SparkTestBase {
     }
     assert(crashed.getMessage == "simulated crash")
 
-    // next reader heals from the set-aside archive slot: the ORIGINAL
-    // table is whole
+    // next reader rolls the half-commit back: the ORIGINAL table is
+    // whole, at exactly its prior version
     val healed = catalog.read(t)
     assert(healed.count() == 2)
     assert(healed.filter(col("symbol") === "AAA").head.getAs[Double]("close") == 10.0)
+    assert(catalog.version(t) == 1)
+    assert(!new java.io.File(s"$wh/$t.pv1").exists())
 
     // retry after recovery applies the update normally
     catalog.crashHook = () => ()
@@ -129,6 +131,9 @@ class CatalogUpsertSpec extends SparkTestBase {
     val out = catalog.read(t)
     assert(out.count() == 2)
     assert(out.filter(col("symbol") === "AAA").head.getAs[Double]("close") == 99.0)
+    assert(catalog.version(t) == 2)
+    assert(catalog.readAsOf(t, 1).filter(col("symbol") === "AAA")
+      .head.getAs[Double]("close") == 10.0)
   }
 
   test("versioned reads: a reader pinned to version k is byte-stable across upserts") {
@@ -146,7 +151,7 @@ class CatalogUpsertSpec extends SparkTestBase {
 
     // pin version 1 and fingerprint its files on disk
     def snapFiles(): Map[String, (Long, Long)] = {
-      val d = new java.io.File(s"$wh/$t.v1")
+      val d = new java.io.File(s"$wh/$t.pv1")
       d.listFiles().filter(_.getName.endsWith(".parquet"))
         .map(f => f.getName -> (f.length(), f.lastModified())).toMap
     }
@@ -183,9 +188,9 @@ class CatalogUpsertSpec extends SparkTestBase {
   }
 
   test("heal restores from the HIGHEST archive when a swap dies with older archives present") {
-    // the recovery case versioning introduced: before round 13 at most
-    // one set-aside copy existed; now heal must pick the newest archive
-    // (the interrupted swap's set-aside), never an older retained version
+    // the recovery case versioning introduced: with older committed
+    // archives present, heal must roll back only the interrupted commit's
+    // half-archive and leave every retained version readable
     val wh = tmpDir("graft-vheal")
     val catalog = new Catalog(spark, wh)
     val t = Schemas.tables.bronze
@@ -195,11 +200,12 @@ class CatalogUpsertSpec extends SparkTestBase {
     upsert(1.0)                          // live v1
     upsert(2.0)                          // archives v1, live v2
     catalog.crashHook = () => throw new RuntimeException("simulated crash")
-    intercept[RuntimeException] { upsert(3.0) } // dies with v2 set aside
+    intercept[RuntimeException] { upsert(3.0) } // dies with v2 archived
     catalog.crashHook = () => ()
-    // heal: live dir missing, archives {v1, v2} -> restore v2, not v1
+    // heal: uncommitted pv2 -> v2 restored live, committed pv1 untouched
     assert(catalog.read(t).head.getAs[Double]("close") == 2.0)
     assert(catalog.version(t) == 2)
+    assert(!new java.io.File(s"$wh/$t.pv2").exists())
     assert(catalog.readAsOf(t, 1).head.getAs[Double]("close") == 1.0)
     // retry applies normally on the healed table
     upsert(3.0)
@@ -320,38 +326,57 @@ class CatalogUpsertSpec extends SparkTestBase {
     assert(snap(4) == Map("AAA" -> 11.0, "BBB" -> 21.0))
   }
 
-  test("a stale legacy '.old' next to a LIVE table is retired, a crash image is restored") {
-    // pre-versioning swapIn left its set-aside in '<table>.old' until the
-    // NEXT swap deleted it, so an upgraded warehouse can carry a stale
-    // '.old' from a COMPLETED old-scheme swap. Left in place it would
-    // linger forever — and if the live dir were ever lost with no v<N>
-    // archives, heal would silently resurrect that pre-upgrade image as
-    // live. Contract: live dir present -> the '.old' is stale, retire it
-    // on first contact; live dir absent -> the '.old' is a genuine
-    // old-scheme crash image, restore it.
-    val wh = tmpDir("graft-legacy")
+  test("a crash mid-overwrite leaves the previous image readable; retry lands") {
+    val wh = tmpDir("graft-owcrash")
     val catalog = new Catalog(spark, wh)
-    val t = Schemas.tables.bronze
-    def upsert(close: Double): Unit =
-      catalog.upsert(df(mkRow("AAA", "2026-01-01", close, "2026-01-02 00:00:00")),
-        t, keys = Seq("symbol", "date"), partitionBy = Seq.empty)
-    // live table + a fabricated stale legacy image beside it
-    upsert(2.0)
-    val legacy = new java.io.File(s"$wh/$t.old")
-    df(mkRow("AAA", "2026-01-01", 1.0, "2026-01-01 00:00:00"))
-      .write.parquet(legacy.getPath)
-    assert(legacy.exists())
-    // any healed operation retires the stale image; live data untouched
-    assert(catalog.read(t).head.getAs[Double]("close") == 2.0)
-    assert(!legacy.exists(), "stale legacy '.old' must be deleted, not kept")
-    // the genuine old-scheme crash shape still heals: live dir gone, no
-    // archives, '.old' holds the data -> restore it as live
-    val wh2 = tmpDir("graft-legacy-crash")
-    val catalog2 = new Catalog(spark, wh2)
-    df(mkRow("AAA", "2026-01-01", 5.0, "2026-01-01 00:00:00"))
-      .write.parquet(s"$wh2/$t.old")
-    assert(catalog2.exists(t))
-    assert(catalog2.read(t).head.getAs[Double]("close") == 5.0)
-    assert(!new java.io.File(s"$wh2/$t.old").exists())
+    val t = Schemas.tables.silver
+    def ow(rows: Row*): Unit = catalog.overwrite(df(rows: _*), t, Seq("symbol"))
+    def snap(d: org.apache.spark.sql.DataFrame): Map[String, Double] =
+      d.collect().map(r => r.getAs[String]("symbol") -> r.getAs[Double]("close")).toMap
+    ow(mkRow("AAA", "2026-01-01", 10.0, "2026-01-02 00:00:00"),
+      mkRow("BBB", "2026-01-01", 20.0, "2026-01-02 00:00:00"))
+    // the new image replaces AAA, drops BBB and adds CCC; die with every
+    // live partition archived and nothing promoted
+    catalog.crashHook = () => throw new RuntimeException("simulated crash")
+    intercept[RuntimeException] {
+      ow(mkRow("AAA", "2026-01-01", 11.0, "2026-01-03 00:00:00"),
+        mkRow("CCC", "2026-01-01", 30.0, "2026-01-03 00:00:00"))
+    }
+    catalog.crashHook = () => ()
+    assert(snap(catalog.read(t)) == Map("AAA" -> 10.0, "BBB" -> 20.0))
+    assert(catalog.version(t) == 1)
+    assert(!new java.io.File(s"$wh/$t/symbol=CCC").exists())
+    assert(!new java.io.File(s"$wh/$t.pv1").exists())
+    assert(!new java.io.File(s"$wh/$t.staging").exists())
+    // retry lands as a versioned commit: the old image stays readable
+    ow(mkRow("AAA", "2026-01-01", 11.0, "2026-01-03 00:00:00"),
+      mkRow("CCC", "2026-01-01", 30.0, "2026-01-03 00:00:00"))
+    assert(catalog.version(t) == 2)
+    assert(snap(catalog.read(t)) == Map("AAA" -> 11.0, "CCC" -> 30.0))
+    assert(!new java.io.File(s"$wh/$t/symbol=BBB").exists())
+    assert(snap(catalog.readAsOf(t, 1)) == Map("AAA" -> 10.0, "BBB" -> 20.0))
+  }
+
+  test("an empty overwrite reads back empty under the declared schema, at every version") {
+    val wh = tmpDir("graft-owempty")
+    val catalog = new Catalog(spark, wh)
+    val t = Schemas.tables.silverRejected
+    def rejected(rows: Row*) =
+      df(rows: _*).withColumn("reject_reason", lit("ohlc_inconsistent"))
+    val declared = Schemas.silverRejected.map(f => f.name -> f.dataType)
+    def check(d: org.apache.spark.sql.DataFrame, n: Long): Unit = {
+      assert(d.schema.map(f => f.name -> f.dataType) == declared)
+      assert(d.count() == n)
+    }
+    catalog.overwrite(rejected(), t, Seq("symbol"))  // creates an empty table
+    check(catalog.read(t), 0)
+    catalog.overwrite(rejected(mkRow("AAA", "2026-01-01", 10.0, "2026-01-02 00:00:00")),
+      t, Seq("symbol"))
+    catalog.overwrite(rejected(), t, Seq("symbol"))  // a run with no rejects
+    assert(catalog.version(t) == 3)
+    check(catalog.read(t), 0)
+    check(catalog.readAsOf(t, 1), 0)
+    check(catalog.readAsOf(t, 2), 1)
+    check(catalog.readAsOf(t, 3), 0)
   }
 }
