@@ -6,9 +6,12 @@ import org.apache.spark.sql.SparkSession
   *
   * Tuned for the local[32] harness but every knob is the one that matters on
   * a real cluster too: AQE on (runtime re-plan, skew-join splitting),
-  * shuffle partitions sized to cores (not the 200 default), UTC, and a
+  * shuffle partitions sized to cores (not the 200 default), UTC, a
   * generated-code cache large enough that a repeated pass over the same
-  * plans reuses its compiled classes instead of recompiling them.
+  * plans reuses its compiled classes instead of recompiling them, and
+  * `file://` served by [[graft.io.LocalFs]], which sets the permissions of
+  * the files and directories a write creates without forking a `chmod`
+  * for each (SCALE.md "Local file system: no process per file").
   */
 object GraftSession {
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
@@ -34,6 +37,7 @@ object GraftSession {
       // before its reuse. Measured distinct classes per pass: perfbench
       // gates 201, daily_wide op ~193, pipeline run ~126, Q1-Q10 ~67.
       .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.LocalFs].getName)
 
   def get(): SparkSession = {
     val spark = builder().getOrCreate()

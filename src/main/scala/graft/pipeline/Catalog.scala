@@ -19,6 +19,13 @@ import org.apache.spark.sql.functions.{broadcast, ceil, col, count, lit, pmod, s
   * rename, archiving the outgoing entries as `<table>.pv<N>`, and [[heal]]
   * rolls back a commit that died half-way. [[append]] writes into the live
   * directory and does not version.
+  *
+  * Within one JVM, a table's [[commit]] and [[heal]], and the heal and
+  * file listing of [[read]], [[exists]], [[version]] and [[readAsOf]],
+  * hold one lock per table directory, shared by every `Catalog` on the
+  * warehouse: a reader waits out a commit in flight instead of rolling it
+  * back as a dead writer's. The Spark write of a staged image runs outside
+  * it. Writers in other JVMs are not coordinated.
   */
 final class Catalog(spark: SparkSession, warehouseDir: String,
                     names: TableNames = TableNames(),
@@ -26,15 +33,18 @@ final class Catalog(spark: SparkSession, warehouseDir: String,
 
   def path(table: String): String = s"$warehouseDir/$table"
 
-  def exists(table: String): Boolean = {
+  def exists(table: String): Boolean = locked(table) {
     heal(table)
     new java.io.File(path(table)).exists()
   }
 
-  def read(table: String): DataFrame = {
+  def read(table: String): DataFrame = locked(table) {
     heal(table)
     readDir(table, path(table))
   }
+
+  private def locked[T](table: String)(body: => T): T =
+    Catalog.lock(new java.io.File(path(table))).synchronized(body)
 
   private def readDir(table: String, dir: String): DataFrame =
     readDirs(table, dir, Seq(dir))
@@ -66,12 +76,12 @@ final class Catalog(spark: SparkSession, warehouseDir: String,
     * name — at most retainVersions+1 scans of METADATA, and data files are
     * shared, never copied. Reading a pruned or future version fails
     * loudly. */
-  def version(table: String): Long = {
+  def version(table: String): Long = locked(table) {
     heal(table)
     committedArchives(table).maxOption.getOrElse(0L) + 1L
   }
 
-  def readAsOf(table: String, k: Long): DataFrame = {
+  def readAsOf(table: String, k: Long): DataFrame = locked(table) {
     val cur = version(table)
     if (k == cur) readDir(table, path(table))
     else {
@@ -239,15 +249,20 @@ final class Catalog(spark: SparkSession, warehouseDir: String,
     staging
   }
 
-  /** Steps 1-5 of the protocol above: `staging` holds the fully-written
-    * new content of every entry it lists. */
-  private def commit(table: String, staging: java.io.File, replaceAll: Boolean): Unit = {
+  /** Commits `staging`, which holds the fully-written new content of
+    * every entry it lists: the first write renames it into place whole,
+    * any later one runs steps 1-5 of the protocol above. */
+  private def commit(table: String, staging: java.io.File,
+                     replaceAll: Boolean): Unit = locked(table) {
     val live = new java.io.File(path(table))
     if (!live.exists()) {
       if (!staging.renameTo(live))
         throw new java.io.IOException(s"cannot create $table from staging")
-      return
-    }
+    } else commitOver(table, live, staging, replaceAll)
+  }
+
+  private def commitOver(table: String, live: java.io.File, staging: java.io.File,
+                         replaceAll: Boolean): Unit = {
     val staged = dataEntries(staging)
     val touched = if (replaceAll) (staged ++ dataEntries(live)).distinct.sorted else staged
     val n = committedArchives(table).maxOption.getOrElse(0L) + 1L
@@ -273,7 +288,7 @@ final class Catalog(spark: SparkSession, warehouseDir: String,
     * archives are immutable and never touched. Runs on every
     * read/exists/version/write so an interrupted writer never needs manual
     * repair. */
-  private def heal(table: String): Unit =
+  private def heal(table: String): Unit = locked(table) {
     archives(table).sorted(Ordering[Long].reverse).foreach { n =>
       val pv = archiveDir(table, n)
       if (!new java.io.File(pv, "_committed").exists()) {
@@ -303,6 +318,7 @@ final class Catalog(spark: SparkSession, warehouseDir: String,
         if (staging.exists()) delete(staging)
       }
     }
+  }
 
   private def archiveDir(table: String, n: Long) =
     new java.io.File(s"${path(table)}.pv$n")
@@ -351,4 +367,12 @@ final class Catalog(spark: SparkSession, warehouseDir: String,
     if (f.isDirectory) f.listFiles().foreach(delete)
     if (f.exists() && !f.delete()) throw new java.io.IOException(s"cannot delete $f")
   }
+}
+
+object Catalog {
+  private val locks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  /** The JVM-wide lock of the table at `dir`, keyed by its canonical path. */
+  private def lock(dir: java.io.File): AnyRef =
+    locks.computeIfAbsent(dir.getCanonicalPath, _ => new Object)
 }

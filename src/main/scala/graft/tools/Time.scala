@@ -12,7 +12,8 @@ import graft.{GraftSession, SparkEntry}
   * the per-reading Spark job count (the contention-immune arbitration
   * signal: an inflated wall at an unchanged job count is box noise, not
   * a plan change) and codegen compile count (non-zero on a timed rep
-  * means it recompiled instead of reusing the warm-up's classes).
+  * means it recompiled instead of reusing the warm-up's classes), and
+  * spawn count (operating-system processes started, [[Spawns]]).
   */
 object Time {
   def main(args: Array[String]): Unit = {
@@ -37,24 +38,26 @@ object Time {
     }
     def compiles(): Long =
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    def once(name: String): (Double, Long, Long) = {
+    def once(name: String): (Double, Long, Long, Long) = {
       val j0 = drainedJobs(); val c0 = compiles()
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
+      val (dt, spawns) = Spawns.count {
+        val t0 = System.nanoTime()
+        SparkEntry.queries(name)(spark, dir)
+          .write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
       val j1 = drainedJobs(); val c1 = compiles()
       releaseResiduals()
       System.gc()
-      (dt, j1 - j0, c1 - c0)
+      (dt, j1 - j0, c1 - c0, spawns)
     }
 
     args.foreach { name =>
       once(name) // warm-up: codegen/JIT/footer caches, uncounted
       val rs = (1 to reps).map { i =>
-        val (dt, j, c) = once(name)
-        println(f"TIMER $name rep=$i ${dt}%.2f s jobs=$j compiles=$c")
-        (dt, j, c)
+        val r @ (dt, j, c, n) = once(name)
+        println(f"TIMER $name rep=$i ${dt}%.2f s jobs=$j compiles=$c spawns=$n")
+        r
       }
       val sorted = rs.map(_._1).sorted
       val med =
@@ -63,7 +66,8 @@ object Time {
       println(f"MEDIAN $name ${med}%.2f s " +
         f"min=${sorted.head}%.2f max=${sorted.last}%.2f " +
         s"jobs=${rs.map(_._2).distinct.mkString("/")} " +
-        s"compiles=${rs.map(_._3).distinct.mkString("/")} reps=$reps")
+        s"compiles=${rs.map(_._3).distinct.mkString("/")} " +
+        s"spawns=${rs.map(_._4).distinct.mkString("/")} reps=$reps")
     }
     spark.stop()
   }

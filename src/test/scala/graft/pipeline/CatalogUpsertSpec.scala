@@ -357,6 +357,37 @@ class CatalogUpsertSpec extends SparkTestBase {
     assert(snap(catalog.readAsOf(t, 1)) == Map("AAA" -> 10.0, "BBB" -> 20.0))
   }
 
+  test("a reader on another Catalog waits out a commit in flight instead of rolling it back") {
+    // Two Catalogs on one warehouse in one JVM; writers in other JVMs are
+    // not coordinated. The reader starts inside the commit's worst window
+    // (every pre-image archived, nothing promoted), where its heal would
+    // take the writer for dead and undo the half-commit.
+    val wh = tmpDir("graft-inflight")
+    val writer = new Catalog(spark, wh)
+    val reader = new Catalog(spark, wh)
+    val t = Schemas.tables.silver
+    writer.overwrite(df(mkRow("AAA", "2026-01-01", 10.0, "2026-01-02 00:00:00"),
+      mkRow("BBB", "2026-01-01", 20.0, "2026-01-02 00:00:00")), t, Seq("symbol"))
+    val read = scala.concurrent.Promise[Long]()
+    var blocked = false
+    var readerThread: Thread = null
+    writer.crashHook = () => {
+      readerThread = new Thread(() => read.complete(scala.util.Try(reader.read(t).count())))
+      readerThread.start()
+      readerThread.join(300)
+      blocked = readerThread.isAlive
+    }
+    writer.overwrite(df(mkRow("AAA", "2026-01-01", 11.0, "2026-01-03 00:00:00"),
+      mkRow("BBB", "2026-01-01", 21.0, "2026-01-03 00:00:00"),
+      mkRow("CCC", "2026-01-01", 30.0, "2026-01-03 00:00:00")), t, Seq("symbol"))
+    writer.crashHook = () => ()
+    readerThread.join()
+    assert(blocked, "the reader must wait while the commit holds the table")
+    assert(writer.version(t) == 2)
+    assert(read.future.value.get.get == 3L, "the reader sees the committed image")
+    assert(reader.read(t).count() == 3L)
+  }
+
   test("an empty overwrite reads back empty under the declared schema, at every version") {
     val wh = tmpDir("graft-owempty")
     val catalog = new Catalog(spark, wh)
