@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   * collect. Pruning correctness never depends on stats freshness
   * tricks: a file is skipped only when its whole [min,max] range lies
   * outside the predicate, and all-null files cannot satisfy a range
-  * predicate. In production the stats frame would be persisted via
-  * `Catalog`/`VersionedCatalog` at write time and incrementally merged
+  * predicate. In production the stats would be recorded per file in
+  * `Catalog`'s manifest at write time and incrementally merged
   * per [[graft.queries.GraphIncrementalQueries q82]]'s partial-merge
   * pattern rather than recomputed.
   */

@@ -1,159 +1,144 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import java.io.File
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, StandardCopyOption}
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, ceil, col, count, lit, pmod, sum, xxhash64}
+import org.apache.spark.sql.graft.ManifestFileIndex
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Minimal parquet-backed catalog: one directory per table under a warehouse
-  * root, Hive-style partition subdirectories.
+  * root, Hive-style partition subdirectories, and a per-table manifest log
+  * that makes every write one atomic, versioned commit — the Delta log
+  * reduced to the parts the pipeline uses (no Delta jar in this
+  * environment, SURVEY §7.3).
   *
   * The reference stores Delta tables partitioned by `symbol` (facts) /
-  * `layer` (DQ) — same layout here on plain parquet (no Delta jar in this
-  * environment, SURVEY §7.3). Partitioning by symbol gives free partition
-  * pruning for the per-symbol analyst queries; at 100 TB the facts would
-  * move to (symbol-bucket, month) composite partitioning so a single hot
-  * symbol cannot produce an oversized partition.
+  * `layer` (DQ) — same layout here. Partitioning by symbol gives free
+  * partition pruning for the per-symbol analyst queries; at 100 TB the
+  * facts would move to (symbol-bucket, month) composite partitioning so a
+  * single hot symbol cannot produce an oversized partition.
   *
-  * Every write except [[append]] ([[upsert]], [[overwrite]], [[compact]])
-  * is one atomic, versioned commit — the analog of a Delta commit: the new
-  * image is written to `<table>.staging`, then [[commit]] swaps it in by
-  * rename, archiving the outgoing entries as `<table>.pv<N>`, and [[heal]]
-  * rolls back a commit that died half-way. [[append]] writes into the live
-  * directory and does not version.
+  * Layout:
+  * {{{
+  *   <wh>/<table>/<k>=<v>/part-*.parquet   data files, never rewritten
+  *   <wh>/<table>/_log/<N>                  version N: its schema, then one
+  *                                          `<bytes>\t<path>` line per live
+  *                                          file, relative to the table
+  *   <wh>/<table>/_log/latest               a hint: some committed N
+  *   <wh>/<table>/_stage_<uuid>/            a write in flight
+  * }}}
   *
-  * Within one JVM, a table's [[commit]] and [[heal]], and the heal and
-  * file listing of [[read]], [[exists]], [[version]] and [[readAsOf]],
-  * hold one lock per table directory, shared by every `Catalog` on the
-  * warehouse: a reader waits out a commit in flight instead of rolling it
-  * back as a dead writer's. The Spark write of a staged image runs outside
-  * it. Writers in other JVMs are not coordinated.
+  * Commit ([[upsert]], [[overwrite]], [[compact]] and [[append]] alike):
+  * Spark writes the new files into a private `_stage_<uuid>` outside any
+  * lock. Then, under the table's JVM lock, the staged files (with their
+  * `.crc` sidecars) are renamed into their partition directories, and
+  * `_log/<base+1>` is created by a hard link from a fully written temp
+  * file, which fails if the name exists. That create is the one commit
+  * point and the claim: if another write landed since the base version
+  * was read, it fails and the write raises `ConcurrentModificationException`
+  * after removing its own files. After the claim the commit moves the
+  * hint, deletes manifests older than [[retainVersions]] with the files
+  * only they list, and deletes dead writers' leftovers: `_stage_`
+  * directories no live write in this JVM owns, and files no retained
+  * manifest lists in the directories it wrote.
+  *
+  * Crash argument: a writer that dies before the link leaves only files
+  * no manifest lists, which no reader opens — the table is exactly at
+  * version N — and the next commit into those directories deletes them.
+  * A writer that dies after the link has committed N+1 whole; the cleanup
+  * it skipped is redone by the next commit. Data files are immutable once
+  * listed, and a version's files stay on disk while its manifest does, so
+  * a reader pinned to a retained version replays the very same files.
+  * Nothing is ever rolled back.
+  *
+  * Reads ([[read]], [[readAsOf]], [[version]], [[exists]]) read one
+  * manifest (plus the hint), take no lock, change nothing on disk and list
+  * no directory: the DataFrame is built from the manifest's file list
+  * ([[org.apache.spark.sql.graft.ManifestFileIndex]]), so it starts no
+  * listing job at any partition count. Commits within one JVM are
+  * serialised per table directory, shared by every `Catalog` on the
+  * warehouse; writers in other JVMs are caught by the claim, but their
+  * cleanup is not coordinated with each other's writes.
   */
 final class Catalog(spark: SparkSession, warehouseDir: String,
                     names: TableNames = TableNames(),
                     retainVersions: Int = 3) {
+  import Catalog._
 
   def path(table: String): String = s"$warehouseDir/$table"
 
-  def exists(table: String): Boolean = locked(table) {
-    heal(table)
-    new java.io.File(path(table)).exists()
-  }
+  private def logDir(table: String) = new File(path(table), "_log")
 
-  def read(table: String): DataFrame = locked(table) {
-    heal(table)
-    readDir(table, path(table))
-  }
+  def exists(table: String): Boolean = version(table) > 0
 
-  private def locked[T](table: String)(body: => T): T =
-    Catalog.lock(new java.io.File(path(table))).synchronized(body)
-
-  private def readDir(table: String, dir: String): DataFrame =
-    readDirs(table, dir, Seq(dir))
-
-  private def readDirs(table: String, basePath: String, dirs: Seq[String]): DataFrame = {
-    val reader = spark.read.option("basePath", basePath)
-    Schemas.of(table, names) match {
-      case Some(schema) =>
-        // Spark appends partition columns after the data columns even under
-        // a user-specified schema; re-project to the declared DDL order so
-        // readers see one stable schema regardless of physical layout.
-        reader.schema(schema).parquet(dirs: _*)
-          .select(schema.fieldNames.map(col): _*)
-      case None => reader.parquet(dirs: _*)
-    }
-  }
+  def read(table: String): DataFrame = readAsOf(table, version(table))
 
   /** VERSIONED READS (the Delta `VERSION AS OF` analog): the table's first
-    * write is version 1 and every [[commit]] adds one. [[version]] numbers
-    * the LIVE image. Version k of every entry resolves to a location — the
-    * live one if no commit after k touched it, else its pre-image in
-    * `<table>.pv<j>` for the SMALLEST j ≥ k that archived it (the entry was
-    * unchanged between k and j by construction); an entry first created
-    * after k is absent. Archived files are immutable from the moment they
-    * move, so a reader pinned to k is byte-stable across any number of
-    * later commits (CatalogUpsertSpec proves file-level identity). One
-    * parquet read per distinct root (live + each contributing archive,
-    * each with its own basePath so partition columns recover), unioned by
-    * name — at most retainVersions+1 scans of METADATA, and data files are
-    * shared, never copied. Reading a pruned or future version fails
-    * loudly. */
-  def version(table: String): Long = locked(table) {
-    heal(table)
-    committedArchives(table).maxOption.getOrElse(0L) + 1L
+    * write is version 1 and every commit adds one; 0 means no table. The
+    * current version and the [[retainVersions]] before it are readable;
+    * reading a pruned or future version fails loudly. */
+  def version(table: String): Long = {
+    val log = logDir(table)
+    var v = readText(new File(log, Hint)).fold(0L)(_.trim.toLong)
+    while (new File(log, (v + 1).toString).exists()) v += 1
+    v
   }
 
-  def readAsOf(table: String, k: Long): DataFrame = locked(table) {
-    val cur = version(table)
-    if (k == cur) readDir(table, path(table))
-    else {
-      require(k >= 1 && k < cur,
-        s"table $table is at version $cur; version $k does not exist yet")
-      val have = committedArchives(table).toSet
-      val needed = (k until cur)
-      require(needed.forall(have.contains),
-        s"version $k of $table was pruned (retainVersions=$retainVersions): " +
-          s"archives ${needed.filterNot(have.contains).mkString(",")} are gone")
-      // entry -> Some(root) (contributing image) | None (absent at k)
-      var m: Map[String, Option[String]] =
-        dataEntries(new java.io.File(path(table)))
-          .map(d => d -> Option(path(table))).toMap
-      needed.sorted(Ordering[Long].reverse).foreach { j =>
-        val pv = archiveDir(table, j)
-        val fresh = readLines(new java.io.File(pv, "_fresh")).toSet
-        readLines(new java.io.File(pv, "_touched")).foreach { d =>
-          if (new java.io.File(pv, d).exists()) m += d -> Some(pv.getPath)
-          else if (fresh.contains(d)) m += d -> None
-        }
-      }
-      // NOTE the .toSeq: collect on the Map would re-key by root and
-      // silently keep ONE entry per root
-      val byRoot = m.toSeq.collect { case (d, Some(root)) => (root, d) }
-        .groupBy(_._1).map { case (root, ds) =>
-          readDirs(table, root, ds.map(_._2).sorted.map(d => s"$root/$d"))
-        }
-      // a version with no entries (an empty overwrite) reads empty
-      if (byRoot.isEmpty) readDir(table, path(table)).where(lit(false))
-      else byRoot.reduce(_.unionByName(_))
+  def readAsOf(table: String, k: Long): DataFrame = {
+    val m = manifest(table, k).getOrElse {
+      val cur = version(table)
+      require(k >= 1 && k <= cur, s"table $table is at version $cur; version $k does not exist")
+      throw new IllegalArgumentException(
+        s"version $k of $table was pruned (retainVersions=$retainVersions)")
     }
+    val declared = Schemas.of(table, names)
+    val df = ManifestFileIndex.dataFrame(spark, path(table), m.files, declared.getOrElse(m.schema))
+    // Spark appends partition columns after the data columns; re-project
+    // a declared table to its DDL order so readers see one stable schema
+    declared.fold(df)(s => df.select(s.fieldNames.map(col): _*))
   }
 
-  /** Full deterministic rewrite (reference silver/gold mode), committed
-    * like any other write: atomic, versioned, crash-safe. */
-  def overwrite(df: DataFrame, table: String, partitionBy: Seq[String]): Unit =
-    commit(table, stage(df, table, partitionBy), replaceAll = true)
+  private def manifest(table: String, k: Long): Option[Manifest] =
+    readText(new File(logDir(table), k.toString)).map(Manifest.parse)
 
-  /** Append (reference DQ mode). The one write into the live directory:
-    * it does not version. */
+  /** Full deterministic rewrite (reference silver/gold mode). */
+  def overwrite(df: DataFrame, table: String, partitionBy: Seq[String]): Unit =
+    commit(table, version(table), df, partitionBy)(replaceAll)
+
+  /** Append (reference DQ mode): the new files join the current ones. */
   def append(df: DataFrame, table: String, partitionBy: Seq[String]): Unit =
-    df.write.mode(SaveMode.Append).partitionBy(partitionBy: _*).parquet(path(table))
+    commit(table, version(table), df, partitionBy)((_, _) => true)
 
   /** MERGE-emulation upsert on `keys` (SURVEY §7.3): incoming rows win on
     * key collision (MERGE's UPDATE-all-columns), unmatched target rows are
     * kept, new keys insert.
     *
     * Scale shape: when the table is partitioned on a key column, only the
-    * partitions the batch touches are read, merged, staged and committed;
-    * a daily batch touching 4 of 10k symbol partitions rewrites 4
-    * directories, not the table. The merge input is partition-pruned by an
-    * IN filter on the touched partition values, so the anti-join's target
-    * side never scans cold partitions. Otherwise the merge restages the
-    * whole table. The staged plan reads the very files being replaced, so
-    * it is materialized to staging first and then PROMOTED BY RENAME, never
-    * rewritten.
+    * partitions the batch touches are read, merged and rewritten; a daily
+    * batch touching 4 of 10k symbol partitions writes 4 partitions' files
+    * and the new version keeps every other partition's files as they are.
+    * The merge input is partition-pruned by an IN filter on the touched
+    * partition values, so the anti-join's target side never scans cold
+    * partitions. Otherwise the merge rewrites the whole table.
     */
   def upsert(incoming: DataFrame, table: String, keys: Seq[String],
              partitionBy: Seq[String]): Unit = {
-    if (!exists(table))
-      return commit(table, stage(incoming, table, partitionBy), replaceAll = true)
+    val base = version(table)
+    if (base == 0) return commit(table, base, incoming, partitionBy)(replaceAll)
     val pcol = partitionBy.headOption.filter(keys.contains)
-    val target = pcol.fold(read(table)) { p =>
+    val current = readAsOf(table, base)
+    val target = pcol.fold(current) { p =>
       // touched partition values: small by construction (one per symbol
       // in the batch) — collected to drive partition pruning
       val touched = incoming.select(incoming(p)).distinct().collect().map(_.get(0))
-      read(table).filter(col(p).isin(touched: _*))
+      current.filter(col(p).isin(touched: _*))
     }
     val merged = incoming.unionByName(
       target.join(incoming.select(keys.map(incoming(_)): _*).distinct(), keys, "left_anti"))
-    commit(table, stage(merged, table, partitionBy), replaceAll = pcol.isEmpty)
+    commit(table, base, merged, partitionBy)(if (pcol.isEmpty) replaceAll else replaceTouched)
   }
 
   /** OPTIMIZE-style compaction: rewrite the table into
@@ -177,7 +162,8 @@ final class Catalog(spark: SparkSession, warehouseDir: String,
     * anyway. */
   def compact(table: String, partitionBy: Seq[String] = Nil,
               targetRowsPerFile: Long = 1000000L): Unit = {
-    val current = read(table)
+    val base = version(table)
+    val current = readAsOf(table, base)
     val dataCols = current.columns.filterNot(partitionBy.contains).map(col)
     val spreadMod = (cnt: Column) =>
       ceil(cnt.cast("double") / targetRowsPerFile).cast("long")
@@ -198,174 +184,97 @@ final class Catalog(spark: SparkSession, warehouseDir: String,
         current.repartition(
           math.max(1, math.ceil(rows.toDouble / targetRowsPerFile).toInt))
       }
-    commit(table, stage(reshaped, table, partitionBy), replaceAll = true)
+    commit(table, base, reshaped, partitionBy)(replaceAll)
   }
 
-  // ---- the commit protocol ----
-  //
-  // The unit of commit is a top-level DATA ENTRY of the table directory: a
-  // `k=v` partition directory, or a data file of an unpartitioned table (a
-  // file's hidden `.crc` sidecar moves with it). A commit replaces either
-  // the entries it staged (a partitioned upsert) or every live entry
-  // (overwrite, compaction, an unpartitioned upsert). The outgoing image of
-  // every replaced entry is renamed into the archive `<table>.pv<N>` and
-  // the staged entries renamed into the live table. Unreplaced entries are
-  // never moved or rewritten, so version N's archive holds exactly what
-  // version N+1 changed — history with zero data copy, the reference's
-  // Delta history on its tables (reference
-  // notebooks/bronze/01_ingest_bronze.py:85-107) re-expressed as
-  // directory generations. The first write to an absent table is staged
-  // and renamed into place whole.
-  //
-  // Protocol (every step crash-safe; [[heal]] is the recovery):
-  //   1. `_touched` (every entry the commit replaces or adds) and `_fresh`
-  //      (the subset with no live pre-image) are written DURABLY into the
-  //      new archive before anything moves — with them a dead writer's
-  //      half-commit is mechanically reversible;
-  //   2. every touched live entry renames into the archive (pre-images);
-  //   3. every staged entry renames into the live table;
-  //   4. `_committed` marker (atomic create) seals `pv<N>`: version N+1
-  //      is live;
-  //   5. archives beyond [[retainVersions]] prune.
-  // A crash before 4 leaves no `_committed`: heal restores archived
-  // pre-images, deletes uncommitted fresh entries, and drops the
-  // half-archive — the table is bit-exactly at version N again. Because
-  // step 2 fully precedes step 3, a touched entry absent from the
-  // half-archive can only be the UNMOVED original (or a fresh one listed
-  // in `_fresh`), so rollback never guesses.
+  // ---- the commit ----
 
-  /** Test seam: invoked in the commit's worst window — every pre-image
-    * archived, nothing promoted. Tests inject a throw to simulate the JVM
-    * dying mid-commit. */
-  private[pipeline] var crashHook: () => Unit = () => ()
+  /** Test seam: invoked at each step of a commit — "staged" (files
+    * written, lock not taken), "moved" (files in place, no manifest: the
+    * worst window) and "claimed" (version N+1 committed, cleanup not run).
+    * Tests inject a throw to simulate the JVM dying there. */
+  private[graft] var crashHook: String => Unit = _ => ()
 
-  /** Writes `df` as the table's staged image (after rolling back any
-    * half-commit, so the commit below numbers and archives against a
-    * committed table). */
-  private def stage(df: DataFrame, table: String, partitionBy: Seq[String]): java.io.File = {
-    heal(table)
-    val staging = new java.io.File(path(table) + ".staging")
-    df.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*).parquet(staging.getPath)
-    staging
-  }
+  /** Which files of the base version a commit keeps, given the top-level
+    * entries (partition directories) of the staged files. */
+  private type Keep = (String, Set[String]) => Boolean
+  private val replaceAll: Keep = (_, _) => false
+  private val replaceTouched: Keep = (f, staged) => !staged.contains(top(f))
 
-  /** Commits `staging`, which holds the fully-written new content of
-    * every entry it lists: the first write renames it into place whole,
-    * any later one runs steps 1-5 of the protocol above. */
-  private def commit(table: String, staging: java.io.File,
-                     replaceAll: Boolean): Unit = locked(table) {
-    val live = new java.io.File(path(table))
-    if (!live.exists()) {
-      if (!staging.renameTo(live))
-        throw new java.io.IOException(s"cannot create $table from staging")
-    } else commitOver(table, live, staging, replaceAll)
-  }
-
-  private def commitOver(table: String, live: java.io.File, staging: java.io.File,
-                         replaceAll: Boolean): Unit = {
-    val staged = dataEntries(staging)
-    val touched = if (replaceAll) (staged ++ dataEntries(live)).distinct.sorted else staged
-    val n = committedArchives(table).maxOption.getOrElse(0L) + 1L
-    val pv = archiveDir(table, n)
-    if (!pv.mkdirs())
-      throw new java.io.IOException(s"cannot create archive ${pv.getName}")
-    writeLinesAtomic(new java.io.File(pv, "_touched"), touched)
-    writeLinesAtomic(new java.io.File(pv, "_fresh"),
-      touched.filterNot(d => new java.io.File(live, d).exists()))
-    touched.foreach(d => if (new java.io.File(live, d).exists()) move(live, pv, d))
-    crashHook() // a simulated crash leaves on-disk state exactly as a real one
-    staged.foreach(move(staging, live, _))
-    if (!new java.io.File(pv, "_committed").createNewFile())
-      throw new java.io.IOException(s"cannot seal ${pv.getName}")
-    delete(staging)
-    committedArchives(table).sorted.dropRight(retainVersions)
-      .foreach(v => delete(archiveDir(table, v)))
-  }
-
-  /** Roll back any UNCOMMITTED archive (a writer that died mid-[[commit]]):
-    * restore archived pre-images, delete fresh entries the dead writer had
-    * already promoted, drop the half-archive and its staging. Committed
-    * archives are immutable and never touched. Runs on every
-    * read/exists/version/write so an interrupted writer never needs manual
-    * repair. */
-  private def heal(table: String): Unit = locked(table) {
-    archives(table).sorted(Ordering[Long].reverse).foreach { n =>
-      val pv = archiveDir(table, n)
-      if (!new java.io.File(pv, "_committed").exists()) {
-        val live = new java.io.File(path(table))
-        val touchedF = new java.io.File(pv, "_touched")
-        if (touchedF.exists()) {
-          val fresh = {
-            val f = new java.io.File(pv, "_fresh")
-            if (f.exists()) readLines(f).toSet else Set.empty[String]
-          }
-          readLines(touchedF).foreach { d =>
-            if (new java.io.File(pv, d).exists()) {
-              // pre-image archived: whatever sits live for d is the dead
-              // writer's promotion (or nothing) — replace with the original
-              deleteEntry(live, d)
-              move(pv, live, d)
-            } else if (fresh.contains(d)) {
-              // no pre-image ever existed: drop the uncommitted entry
-              deleteEntry(live, d)
-            }
-            // else: archive rename for d never ran, so (step order) no
-            // promotion ran either — the live entry IS the original; keep it
-          }
+  /** Commits `df` as version `base + 1`: its files plus the base's files
+    * that `keep` retains. */
+  private def commit(table: String, base: Long, df: DataFrame, partitionBy: Seq[String])
+                    (keep: Keep): Unit = {
+    val dir = new File(path(table)).getCanonicalFile
+    val stage = new File(dir, s"_stage_${java.util.UUID.randomUUID()}")
+    inFlight.add(stage.getPath)
+    try {
+      df.write.partitionBy(partitionBy: _*).parquet(stage.getPath)
+      crashHook("staged")
+      val staged = dataFiles(stage)
+      Catalog.lock(dir).synchronized {
+        val log = logDir(table)
+        val next = base + 1
+        if (new File(log, next.toString).exists()) conflict(table, base, stage)
+        val kept = if (base == 0) Nil else {
+          val tops = staged.map(f => top(f._1)).toSet
+          manifest(table, base).get.files.filter(f => keep(f._1, tops))
         }
-        delete(pv)
-        val staging = new java.io.File(path(table) + ".staging")
-        if (staging.exists()) delete(staging)
+        staged.foreach(f => move(stage, dir, f._1))
+        crashHook("moved")
+        if (!claim(log, next, Manifest(df.schema, kept ++ staged))) {
+          staged.foreach(f => deleteFile(dir, f._1))
+          conflict(table, base, stage)
+        }
+        crashHook("claimed")
+        writeAtomic(new File(log, Hint), next.toString)
+        delete(stage)
+        cleanUp(table, dir, next, staged.map(_._1))
       }
+    } finally inFlight.remove(stage.getPath)
+  }
+
+  private def conflict(table: String, base: Long, stage: File): Nothing = {
+    delete(stage)
+    throw new java.util.ConcurrentModificationException(
+      s"table $table moved past version $base while this write ran; retry from a fresh read")
+  }
+
+  /** Creates `_log/<v>` whole, or returns false if it exists. */
+  private def claim(log: File, v: Long, m: Manifest): Boolean = {
+    log.mkdirs()
+    val tmp = new File(log, s".$v-${java.util.UUID.randomUUID()}.tmp")
+    Files.write(tmp.toPath, m.text.getBytes(UTF_8))
+    try { Files.createLink(new File(log, v.toString).toPath, tmp.toPath); true }
+    catch { case _: FileAlreadyExistsException => false }
+    finally Files.delete(tmp.toPath)
+  }
+
+  /** Drops the manifests before the retained window with the files only
+    * they list, then dead writers' leftovers: claim temp files, `_stage_`
+    * directories no write in this JVM owns, and files in the directories
+    * this commit wrote that no retained manifest lists. */
+  private def cleanUp(table: String, dir: File, v: Long, written: Seq[String]): Unit = {
+    val log = logDir(table)
+    val oldest = v - retainVersions
+    val listed = (oldest to v).flatMap(k => manifest(table, k)).flatMap(_.files.map(_._1)).toSet
+    val entries = Option(log.list()).getOrElse(Array.empty[String]).toSeq
+    val expired = entries.flatMap(_.toLongOption).filter(_ < oldest).sorted
+    expired.foreach { k =>
+      manifest(table, k).foreach(_.files.map(_._1).filterNot(listed).foreach(deleteFile(dir, _)))
+      delete(new File(log, k.toString))
     }
-  }
-
-  private def archiveDir(table: String, n: Long) =
-    new java.io.File(s"${path(table)}.pv$n")
-
-  private def archives(table: String): Seq[Long] = {
-    val prefix = s"$table.pv"
-    Option(new java.io.File(warehouseDir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith(prefix))
-      .flatMap(f => f.getName.stripPrefix(prefix).toLongOption).toSeq
-  }
-
-  private def committedArchives(table: String): Seq[Long] =
-    archives(table).filter(n => new java.io.File(archiveDir(table, n), "_committed").exists())
-
-  /** The commit's units under `root`. Names starting with `_` or `.`
-    * (`_SUCCESS`, checksum sidecars) are metadata Spark never reads. */
-  private def dataEntries(root: java.io.File): Seq[String] =
-    Option(root.list()).getOrElse(Array.empty)
-      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSeq.sorted
-
-  /** An entry with its hidden `.crc` sidecar, if it has one. */
-  private def withSidecar(d: String): Seq[String] = Seq(d, s".$d.crc")
-
-  private def move(from: java.io.File, to: java.io.File, d: String): Unit =
-    withSidecar(d).foreach { n =>
-      val src = new java.io.File(from, n)
-      if (src.exists() && !src.renameTo(new java.io.File(to, n)))
-        throw new java.io.IOException(s"cannot move $n from ${from.getName} to ${to.getName}")
+    entries.filter(_.startsWith(".")).foreach(n => delete(new File(log, n)))
+    dir.listFiles().filter(f => f.getName.startsWith("_stage_") && !inFlight.contains(f.getPath))
+      .foreach(delete)
+    written.map(f => f.take(f.lastIndexOf('/') + 1)).distinct.foreach { prefix =>
+      Option(new File(dir, prefix).list()).getOrElse(Array.empty[String])
+        .filterNot(_.startsWith("_"))
+        .map(n => if (n.startsWith(".") && n.endsWith(".crc")) n.drop(1).dropRight(4) else n)
+        .distinct.map(prefix + _)
+        .filterNot(f => listed(f) || new File(dir, f).isDirectory)
+        .foreach(deleteFile(dir, _))
     }
-
-  private def deleteEntry(dir: java.io.File, d: String): Unit =
-    withSidecar(d).foreach(n => delete(new java.io.File(dir, n)))
-
-  private def readLines(f: java.io.File): Seq[String] =
-    new String(java.nio.file.Files.readAllBytes(f.toPath))
-      .linesIterator.filter(_.nonEmpty).toSeq
-
-  private def writeLinesAtomic(f: java.io.File, lines: Seq[String]): Unit = {
-    val tmp = new java.io.File(f.getParentFile, f.getName + ".tmp")
-    java.nio.file.Files.write(tmp.toPath, lines.mkString("\n").getBytes)
-    java.nio.file.Files.move(tmp.toPath, f.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  private def delete(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(delete)
-    if (f.exists() && !f.delete()) throw new java.io.IOException(s"cannot delete $f")
   }
 }
 
@@ -373,6 +282,82 @@ object Catalog {
   private val locks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
   /** The JVM-wide lock of the table at `dir`, keyed by its canonical path. */
-  private def lock(dir: java.io.File): AnyRef =
+  private def lock(dir: File): AnyRef =
     locks.computeIfAbsent(dir.getCanonicalPath, _ => new Object)
+
+  /** Stage directories of the writes running in this JVM. */
+  private val inFlight = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  private val Hint = "latest"
+
+  private final case class Manifest(schema: StructType, files: Seq[(String, Long)]) {
+    def text: String =
+      (schema.json +: files.map { case (f, n) => s"$n\t$f" }).mkString("", "\n", "\n")
+  }
+
+  private object Manifest {
+    def parse(text: String): Manifest = {
+      val lines = text.linesIterator.toSeq
+      Manifest(DataType.fromJson(lines.head).asInstanceOf[StructType],
+        lines.tail.filter(_.nonEmpty).map { l =>
+          val Array(n, f) = l.split("\t", 2)
+          f -> n.toLong
+        })
+    }
+  }
+
+  /** The partition directory (or, unpartitioned, the file) a table-relative
+    * path sits in. */
+  private def top(f: String): String = f.takeWhile(_ != '/')
+
+  private def readText(f: File): Option[String] =
+    try Some(new String(Files.readAllBytes(f.toPath), UTF_8))
+    catch { case _: NoSuchFileException => None }
+
+  private def writeAtomic(f: File, text: String): Unit = {
+    val tmp = new File(f.getParentFile, s".${f.getName}.tmp")
+    Files.write(tmp.toPath, text.getBytes(UTF_8))
+    Files.move(tmp.toPath, f.toPath, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** The data files under `root` with their sizes, as `/`-separated paths
+    * relative to it. Names starting with `_` or `.` (`_SUCCESS`, checksum
+    * sidecars) are metadata Spark never reads. */
+  private def dataFiles(root: File): Seq[(String, Long)] = {
+    def walk(f: File, rel: String): Seq[(String, Long)] =
+      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty[File]).toSeq
+        .filterNot(c => c.getName.startsWith("_") || c.getName.startsWith("."))
+        .flatMap(c => walk(c, rel + c.getName + (if (c.isDirectory) "/" else "")))
+      else Seq(rel -> f.length())
+    walk(root, "").sorted
+  }
+
+  /** A table-relative data file and its hidden `.crc` sidecar. */
+  private def withSidecar(f: String): Seq[String] = {
+    val i = f.lastIndexOf('/') + 1
+    Seq(f, s"${f.take(i)}.${f.drop(i)}.crc")
+  }
+
+  private def move(from: File, to: File, f: String): Unit =
+    withSidecar(f).foreach { n =>
+      val src = new File(from, n)
+      val dst = new File(to, n)
+      dst.getParentFile.mkdirs()
+      if (src.exists() && !src.renameTo(dst))
+        throw new java.io.IOException(s"cannot move $n from ${from.getName} to ${to.getName}")
+    }
+
+  /** Deletes a data file, its sidecar, and the partition directories it
+    * leaves empty. */
+  private def deleteFile(dir: File, f: String): Unit = {
+    withSidecar(f).foreach(n => delete(new File(dir, n)))
+    var d = new File(dir, f).getParentFile
+    while (d != dir && d.delete()) d = d.getParentFile
+  }
+
+  private def delete(f: File): Unit = {
+    if (f.isDirectory) f.listFiles().foreach(delete)
+    if (f.exists() && !f.delete()) throw new java.io.IOException(s"cannot delete $f")
+  }
 }

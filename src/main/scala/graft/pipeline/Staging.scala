@@ -1,6 +1,7 @@
 package graft.pipeline
 
-/** Temp staging for write→read round-trip gates. */
+/** Temp staging for write→read round-trip gates, and the one best-effort
+  * recursive delete. */
 object Staging {
 
   /** Creates a temp dir, passes it to `f`, and ALWAYS deletes it
@@ -14,7 +15,8 @@ object Staging {
     try f(dir) finally rm(new java.io.File(dir))
   }
 
-  private def rm(f: java.io.File): Unit = {
+  /** Best-effort recursive delete: what cannot be deleted stays. */
+  def rm(f: java.io.File): Unit = {
     if (f.isDirectory)
       Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
     f.delete(): Unit

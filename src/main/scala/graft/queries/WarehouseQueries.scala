@@ -450,7 +450,7 @@ object WarehouseQueries extends QueryModule {
     * [[graft.pipeline.TableDiff]]: one full outer join on the key, change
     * classification added/removed/changed, unchanged rows dropped. The
     * append-only source means 'removed' cannot occur here (the spec
-    * exercises it on real [[graft.pipeline.VersionedCatalog]] snapshots);
+    * exercises it on real [[graft.pipeline.Catalog]] versions);
     * the oracle replays the same two-snapshot diff in SQL. */
   private def q96(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -863,29 +863,28 @@ object WarehouseQueries extends QueryModule {
       |FROM cells WHERE rk = 1
       |ORDER BY b, t_idx, user_id""".stripMargin
 
-  /** q325: snapshot diff over REAL [[graft.pipeline.VersionedCatalog]]
-    * TIME TRAVEL — the one catalog feature previously checked only by
-    * specs, now under the DuckDB hash gate: the gate publishes two
-    * commits of a customer-aggregate table into a throwaway warehouse
-    * (v1 = orders with 1994 ≤ orderdate < 1996, v2 = the window slid one
-    * year), then reads BOTH commits back BY ID through `read(table, c)`
-    * and diffs them with [[graft.pipeline.TableDiff]]. The sliding
-    * window makes all three change types occur (added / removed /
-    * changed); the oracle replays the two snapshot derivations straight
-    * from `orders` and the same full-outer diff — if time travel
-    * resolved the wrong version directory or leaked rows across commits,
-    * the hash breaks. Money is cents-quantized BIGINT (the engine-wide
-    * exactness idiom).
+  /** q325: snapshot diff over REAL [[graft.pipeline.Catalog]] TIME TRAVEL
+    * — the one catalog feature previously checked only by specs, now
+    * under the DuckDB hash gate: the gate commits two overwrites of a
+    * customer-aggregate table into a throwaway warehouse (v1 = orders
+    * with 1994 ≤ orderdate < 1996, v2 = the window slid one year), then
+    * reads BOTH versions back through `readAsOf` and diffs them with
+    * [[graft.pipeline.TableDiff]]. The sliding window makes all three
+    * change types occur (added / removed / changed); the oracle replays
+    * the two snapshot derivations straight from `orders` and the same
+    * full-outer diff — if time travel resolved the wrong manifest or
+    * leaked files across versions, the hash breaks. Money is
+    * cents-quantized BIGINT (the engine-wide exactness idiom).
     *
     * Scale shape: two grouped aggregates (one shuffle each on custkey)
-    * to publish, then the diff's single full-outer join on the same key;
+    * to write, then the diff's single full-outer join on the same key;
     * the catalog adds manifest reads only (file-count-sized, not
     * row-sized). The result is materialized eagerly so the throwaway
     * warehouse can be deleted before returning. */
   private def q325(s: SparkSession, dir: String): DataFrame =
-    graft.pipeline.Staging.withStagedDir("graft_vc_q325_") { wh =>
+    graft.pipeline.Staging.withStagedDir("graft_cat_q325_") { wh =>
       import s.implicits._
-      val vc = new graft.pipeline.VersionedCatalog(s, wh)
+      val cat = new graft.pipeline.Catalog(s, wh)
       val o = Tables.orders(s, dir)
       def snap(lo: String, hi: String): DataFrame =
         o.filter($"o_orderdate" >= lit(java.sql.Timestamp.valueOf(lo)) &&
@@ -893,12 +892,10 @@ object WarehouseQueries extends QueryModule {
           .groupBy($"o_custkey".as("custkey"))
           .agg(count(lit(1)).as("n_orders"),
             sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
-      val c1 = vc.publish(Map("cust_agg" ->
-        snap("1994-01-01 00:00:00", "1996-01-01 00:00:00")))
-      val c2 = vc.publish(Map("cust_agg" ->
-        snap("1995-01-01 00:00:00", "1997-01-01 00:00:00")))
+      cat.overwrite(snap("1994-01-01 00:00:00", "1996-01-01 00:00:00"), "cust_agg", Nil)
+      cat.overwrite(snap("1995-01-01 00:00:00", "1997-01-01 00:00:00"), "cust_agg", Nil)
       graft.pipeline.TableDiff.diff(
-          vc.read("cust_agg", c1), vc.read("cust_agg", c2),
+          cat.readAsOf("cust_agg", 1), cat.readAsOf("cust_agg", 2),
           keyCols = Seq("custkey"), compareCols = Seq("n_orders", "cents"))
         .orderBy($"custkey")
         .localCheckpoint(true) // pin before the warehouse disappears
@@ -931,13 +928,13 @@ object WarehouseQueries extends QueryModule {
       |ORDER BY custkey""".stripMargin
 
   /** q364: CATALOG VERSIONED READ (`VERSION AS OF` on the MERGE-emulating
-    * [[graft.pipeline.Catalog]]) — every commit archives the outgoing
-    * table entries instead of deleting them, and this gate puts that
-    * read path under the DuckDB hash: a throwaway warehouse takes two
+    * [[graft.pipeline.Catalog]]) — every commit writes a new manifest and
+    * keeps the outgoing files listed by the older ones, and this gate puts
+    * that read path under the DuckDB hash: a throwaway warehouse takes two
     * non-partitioned upserts of a per-customer aggregate (v1 = pre-1996
     * orders; the incoming batch = 1996+ orders, which UPDATES colliding
     * custkeys and INSERTS new ones), then BOTH versions are read back —
-    * v1 through `readAsOf` against the immutable archived snapshot, v2 as
+    * v1 through `readAsOf` against version 1's immutable files, v2 as
     * the live merge — and summarized one row per version. The oracle
     * replays the v1 derivation and the MERGE semantics (incoming ∪ target
     * anti incoming, the q13 contract) straight from `orders`: a versioned
@@ -946,8 +943,8 @@ object WarehouseQueries extends QueryModule {
     *
     * Scale shape: two grouped aggregates to build the images, the
     * upsert's anti-join (key-shuffled, partition-prunable at scale), and
-    * two 1-row summaries; versioning itself adds only directory renames —
-    * no data copy at any size. Cents are exact BIGINT (engine-wide money
+    * two 1-row summaries; versioning itself adds only file renames and a
+    * manifest — no data copy at any size. Cents are exact BIGINT (engine-wide money
     * idiom). Result is pinned eagerly so the warehouse can be deleted. */
   private def q364(s: SparkSession, dir: String): DataFrame =
     graft.pipeline.Staging.withStagedDir("graft_cat_q364_") { wh =>
@@ -980,20 +977,20 @@ object WarehouseQueries extends QueryModule {
     * A throwaway warehouse publishes a status-partitioned per-customer
     * aggregate (v1 = pre-1996 orders, all statuses), then upserts a
     * batch restricted to status 'O' (1996+ orders) — touching exactly
-    * ONE partition. Both versions are read back — v1 partly through the
-    * `pv1` pre-image archive (status O) and partly through the live
-    * directories the commit never moved (F, P), v2 as the live table —
-    * and summarized per (version, status). The oracle replays both
+    * ONE partition. Both versions are read back — v1 from version 1's
+    * manifest, whose status-O files the upsert superseded and whose F and
+    * P files version 2 still lists, v2 as the live table — and summarized
+    * per (version, status). The oracle replays both
     * derivations and the MERGE semantics from `orders`: a versioned
     * read that resolved a partition to the wrong generation, leaked
     * merged rows into v1, or lost an untouched partition lands in the
     * hash.
     *
     * Scale shape: the upsert reads/merges/promotes ONLY the touched
-    * partition (the q13 contract), versioning adds directory renames —
-    * no data copy at any size — and the versioned read is one metadata
-    * scan per contributing root (≤ retainVersions+1), with data files
-    * shared between versions, never duplicated. */
+    * partition (the q13 contract), versioning adds file renames and a
+    * manifest — no data copy at any size — and the versioned read is one
+    * manifest read, with data files shared between versions, never
+    * duplicated. */
   private def q365(s: SparkSession, dir: String): DataFrame =
     graft.pipeline.Staging.withStagedDir("graft_cat_q365_") { wh =>
       import s.implicits._

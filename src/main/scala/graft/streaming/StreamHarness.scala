@@ -71,11 +71,6 @@ object StreamHarness {
     else System.getProperty("java.io.tmpdir")
   }
 
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-    f.delete(): Unit
-  }
-
   /** Runs `pipeline` to completion under Trigger.AvailableNow into a
     * uniquely-named memory sink and returns the sink table. The pipeline
     * frame may be built before the call — Spark resolves the conf at
@@ -134,7 +129,7 @@ object StreamHarness {
     }
     try q.awaitTermination()
     finally if (durableRoot.isEmpty)
-      rm(ck) // the memory sink holds the results; the logs are spent
+      graft.pipeline.Staging.rm(ck) // the memory sink holds the results; the logs are spent
     check(q)
     s.table(sink)
   }

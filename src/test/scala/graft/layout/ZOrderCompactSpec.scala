@@ -57,14 +57,22 @@ class ZOrderCompactSpec extends SparkTestBase {
       cat.append(Seq.tabulate(100)(k => (i * 100 + k, s"v$k")).toDF("id", "v"),
         "t", Nil)
     }
-    def files() = new java.io.File(s"$wh/t").listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
+    // the live files: those the current version lists
+    def files() = cat.read("t").inputFiles.length
     val before = files()
     assert(before >= 8, s"expected >=8 small files, got $before")
     val beforeRows = cat.read("t").orderBy("id").collect().toSeq
+    // a compaction that dies with its file in place leaves the table as it was
+    cat.crashHook = { case "moved" => throw new RuntimeException("simulated crash")
+                      case _ => }
+    intercept[RuntimeException](cat.compact("t", targetRowsPerFile = 1000000L))
+    cat.crashHook = _ => ()
+    assert(files() == before && cat.version("t") == 8)
+    assert(cat.read("t").orderBy("id").collect().toSeq == beforeRows)
     cat.compact("t", targetRowsPerFile = 1000000L)
     assert(files() == 1, s"expected 1 compacted file, got ${files()}")
     assert(cat.read("t").orderBy("id").collect().toSeq == beforeRows)
+    assert(graft.pipeline.CatalogLayout.unlisted(wh, "t").isEmpty)
   }
 
   test("partitioned compaction sizes files per directory, not per table") {
@@ -77,8 +85,7 @@ class ZOrderCompactSpec extends SparkTestBase {
         Seq.tabulate(50)(k => ("cold", i * 1000 + k, s"v$k"))
       cat.append(rows.toDF("part", "id", "v"), "t", Seq("part"))
     }
-    def files(p: String) = new java.io.File(s"$wh/t/part=$p").listFiles()
-      .count(_.getName.endsWith(".parquet"))
+    def files(p: String) = cat.read("t").inputFiles.count(_.contains(s"/part=$p/"))
     assert(files("hot") >= 6 && files("cold") >= 6)
     val before = cat.read("t").orderBy("part", "id").collect().toSeq
     cat.compact("t", partitionBy = Seq("part"), targetRowsPerFile = 1000L)

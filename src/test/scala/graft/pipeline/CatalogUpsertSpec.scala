@@ -7,8 +7,10 @@ import org.apache.spark.sql.functions._
 
 /** Dynamic-partition upsert: only touched partitions rewrite; untouched
   * partition files stay byte-identical on disk (the 100 TB MERGE story —
-  * a daily batch must not rewrite the table image). */
+  * a daily batch must not rewrite the table image). Also the commit's
+  * crash, versioning, append and concurrent-writer guarantees. */
 class CatalogUpsertSpec extends SparkTestBase {
+  import CatalogLayout._
 
   private def mkRow(symbol: String, date: String, close: Double, ingested: String): Row =
     Row(symbol, Date.valueOf(date), close, close + 1, close - 1, close, 100L,
@@ -48,6 +50,9 @@ class CatalogUpsertSpec extends SparkTestBase {
       t, keys = Seq("symbol", "date"), partitionBy = Seq("symbol"))
 
     assert(files("BBB") == bbbBefore) // untouched partition: identical files
+    // and version 2 lists version 1's BBB files as they are
+    def bbb(v: Long) = listed(wh, t, v).filter(_.startsWith("symbol=BBB/"))
+    assert(bbb(2) == bbb(1) && bbb(1).nonEmpty)
 
     val out = catalog.read(t)
     assert(out.count() == 4) // 3 AAA + 1 BBB
@@ -95,7 +100,7 @@ class CatalogUpsertSpec extends SparkTestBase {
     assert(out.filter(col("d") === 2).count() == n) // all inserts landed
   }
 
-  test("a crash mid-swap never loses the table: heal restores, retry lands") {
+  test("a crash mid-commit never loses the table: it stays at its version, retry lands") {
     val wh = tmpDir("graft-upsert3")
     val catalog = new Catalog(spark, wh)
     val t = Schemas.tables.bronze
@@ -107,25 +112,27 @@ class CatalogUpsertSpec extends SparkTestBase {
       t, keys = Seq("symbol", "date"), partitionBy = Seq.empty)
     assert(catalog.read(t).count() == 2)
 
-    // die at the worst point: every live file archived, staging not yet
-    // promoted — the exact window where delete-then-rename lost the table
-    catalog.crashHook = () => throw new RuntimeException("simulated crash")
+    // die at the worst point: the new files renamed in beside the live
+    // ones, no manifest written yet
+    catalog.crashHook = { case "moved" => throw new RuntimeException("simulated crash")
+                          case _ => }
     val crashed = intercept[RuntimeException] {
       catalog.upsert(df(mkRow("AAA", "2026-01-01", 99.0, "2026-01-03 00:00:00")),
         t, keys = Seq("symbol", "date"), partitionBy = Seq.empty)
     }
     assert(crashed.getMessage == "simulated crash")
 
-    // next reader rolls the half-commit back: the ORIGINAL table is
-    // whole, at exactly its prior version
-    val healed = catalog.read(t)
-    assert(healed.count() == 2)
-    assert(healed.filter(col("symbol") === "AAA").head.getAs[Double]("close") == 10.0)
+    // the dead writer's file sits in the table directory, but no manifest
+    // lists it: the table is whole, at exactly its prior version
+    assert(unlisted(wh, t).nonEmpty)
+    val survived = catalog.read(t)
+    assert(scanned(survived, t) == listed(wh, t, 1))
+    assert(survived.count() == 2)
+    assert(survived.filter(col("symbol") === "AAA").head.getAs[Double]("close") == 10.0)
     assert(catalog.version(t) == 1)
-    assert(!new java.io.File(s"$wh/$t.pv1").exists())
 
-    // retry after recovery applies the update normally
-    catalog.crashHook = () => ()
+    // the retry applies the update and deletes the dead writer's leftovers
+    catalog.crashHook = _ => ()
     catalog.upsert(df(mkRow("AAA", "2026-01-01", 99.0, "2026-01-03 00:00:00")),
       t, keys = Seq("symbol", "date"), partitionBy = Seq.empty)
     val out = catalog.read(t)
@@ -134,6 +141,7 @@ class CatalogUpsertSpec extends SparkTestBase {
     assert(catalog.version(t) == 2)
     assert(catalog.readAsOf(t, 1).filter(col("symbol") === "AAA")
       .head.getAs[Double]("close") == 10.0)
+    assert(unlisted(wh, t).isEmpty && stages(wh, t).isEmpty)
   }
 
   test("versioned reads: a reader pinned to version k is byte-stable across upserts") {
@@ -144,28 +152,25 @@ class CatalogUpsertSpec extends SparkTestBase {
       catalog.upsert(df(mkRow("AAA", day, close, "2026-01-02 00:00:00")),
         t, keys = Seq("symbol", "date"), partitionBy = Seq.empty)
 
-    upsert(10.0, "2026-01-01")          // live = v1 (no archives yet)
+    upsert(10.0, "2026-01-01")          // v1
     assert(catalog.version(t) == 1)
-    upsert(20.0, "2026-01-01")          // archives v1, live = v2
+    upsert(20.0, "2026-01-01")          // v2
     assert(catalog.version(t) == 2)
 
     // pin version 1 and fingerprint its files on disk
-    def snapFiles(): Map[String, (Long, Long)] = {
-      val d = new java.io.File(s"$wh/$t.pv1")
-      d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> (f.length(), f.lastModified())).toMap
-    }
+    def snapFiles(): Map[String, (Long, Long)] = stamps(wh, t, listed(wh, t, 1))
     val filesBefore = snapFiles()
     val pinnedBefore = catalog.readAsOf(t, 1)
       .select(col("symbol"), col("date"), col("close")).collect().toSeq
 
     // two more concurrent-writer commits move the live table twice
-    upsert(30.0, "2026-01-01")          // archives v2, live = v3
-    upsert(40.0, "2026-01-02")          // archives v3, live = v4
+    upsert(30.0, "2026-01-01")          // v3
+    upsert(40.0, "2026-01-02")          // v4
     assert(catalog.version(t) == 4)
 
     // version 1 is byte-identical on disk and value-identical on read
     assert(snapFiles() == filesBefore, "pinned snapshot files moved or rewrote")
+    assert(scanned(catalog.readAsOf(t, 1), t) == filesBefore.keySet)
     assert(catalog.readAsOf(t, 1)
       .select(col("symbol"), col("date"), col("close")).collect().toSeq == pinnedBefore)
     assert(catalog.readAsOf(t, 1).head.getAs[Double]("close") == 10.0)
@@ -187,31 +192,31 @@ class CatalogUpsertSpec extends SparkTestBase {
     intercept[IllegalArgumentException] { tight.readAsOf(t, 1) }    // pruned
   }
 
-  test("heal restores from the HIGHEST archive when a swap dies with older archives present") {
-    // the recovery case versioning introduced: with older committed
-    // archives present, heal must roll back only the interrupted commit's
-    // half-archive and leave every retained version readable
+  test("a crash with older versions retained leaves every retained version readable") {
+    // with older versions retained, a commit that dies must leave the
+    // current version AND every retained one readable, and the retry must
+    // number on top of them
     val wh = tmpDir("graft-vheal")
     val catalog = new Catalog(spark, wh)
     val t = Schemas.tables.bronze
     def upsert(close: Double): Unit =
       catalog.upsert(df(mkRow("AAA", "2026-01-01", close, "2026-01-02 00:00:00")),
         t, keys = Seq("symbol", "date"), partitionBy = Seq.empty)
-    upsert(1.0)                          // live v1
-    upsert(2.0)                          // archives v1, live v2
-    catalog.crashHook = () => throw new RuntimeException("simulated crash")
-    intercept[RuntimeException] { upsert(3.0) } // dies with v2 archived
-    catalog.crashHook = () => ()
-    // heal: uncommitted pv2 -> v2 restored live, committed pv1 untouched
+    upsert(1.0)                          // v1
+    upsert(2.0)                          // v2
+    catalog.crashHook = { case "moved" => throw new RuntimeException("simulated crash")
+                          case _ => }
+    intercept[RuntimeException] { upsert(3.0) } // dies with its file in place
+    catalog.crashHook = _ => ()
     assert(catalog.read(t).head.getAs[Double]("close") == 2.0)
     assert(catalog.version(t) == 2)
-    assert(!new java.io.File(s"$wh/$t.pv2").exists())
     assert(catalog.readAsOf(t, 1).head.getAs[Double]("close") == 1.0)
-    // retry applies normally on the healed table
+    // retry applies normally on top of version 2
     upsert(3.0)
     assert(catalog.version(t) == 3)
     assert(catalog.readAsOf(t, 2).head.getAs[Double]("close") == 2.0)
     assert(catalog.read(t).head.getAs[Double]("close") == 3.0)
+    assert(unlisted(wh, t).isEmpty)
   }
 
   test("PARTITIONED versioned reads: per-partition time travel, untouched files shared") {
@@ -246,11 +251,14 @@ class CatalogUpsertSpec extends SparkTestBase {
     assert(snap(3) == Map(("AAA", "2026-01-01") -> 11.0, ("AAA", "2026-01-02") -> 12.0,
       ("BBB", "2026-01-01") -> 21.0, ("CCC", "2026-01-01") -> 30.0,
       ("DDD", "2026-01-01") -> 40.0))
-    // the archives hold exactly the touched partitions — history with no
-    // data copy: pv1 archived v1-AAA (touched by v2), pv2 archived v2-BBB
-    assert(new java.io.File(s"$wh/$t.pv1/symbol=AAA").exists())
-    assert(!new java.io.File(s"$wh/$t.pv1/symbol=BBB").exists())
-    assert(new java.io.File(s"$wh/$t.pv2/symbol=BBB").exists())
+    // history with no data copy: a version lists the very files of every
+    // partition the commit did not touch, and new files only for the
+    // touched ones
+    def in(v: Long, sym: String) = listed(wh, t, v).filter(_.startsWith(s"symbol=$sym/"))
+    assert(in(2, "BBB") == in(1, "BBB") && in(2, "DDD") == in(1, "DDD"))
+    assert(in(2, "AAA").intersect(in(1, "AAA")).isEmpty)
+    assert(in(3, "AAA") == in(2, "AAA") && in(3, "DDD") == in(1, "DDD"))
+    assert(in(3, "BBB").intersect(in(2, "BBB")).isEmpty && in(3, "CCC").nonEmpty)
     // reading a version never blocks pruned-forward reads of live
     assert(catalog.read(t).count() == 5)
   }
@@ -264,43 +272,38 @@ class CatalogUpsertSpec extends SparkTestBase {
         partitionBy = Seq("symbol"))
     up(mkRow("AAA", "2026-01-01", 10.0, "2026-01-02 00:00:00"),
       mkRow("BBB", "2026-01-01", 20.0, "2026-01-02 00:00:00"))
-    def files(sym: String): Map[String, Long] = {
-      val d = new java.io.File(s"$wh/$t/symbol=$sym")
-      Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> f.lastModified()).toMap
-    }
-    val before = (files("AAA"), files("BBB"))
-    // die in the worst window: pre-images archived, nothing promoted,
-    // a brand-new CCC partition staged
-    catalog.crashHook = () => throw new RuntimeException("simulated crash")
+    val v1 = listed(wh, t, 1)
+    val before = stamps(wh, t, v1)
+    // die in the worst window: the new AAA file and a brand-new CCC
+    // partition renamed in, no manifest written
+    catalog.crashHook = { case "moved" => throw new RuntimeException("simulated crash")
+                          case _ => }
     intercept[RuntimeException] {
       up(mkRow("AAA", "2026-01-01", 11.0, "2026-01-03 00:00:00"),
         mkRow("CCC", "2026-01-01", 30.0, "2026-01-03 00:00:00"))
     }
-    catalog.crashHook = () => ()
-    // heal: table is bit-exactly at v1 (same file names AND mtimes),
-    // the half-archive and staging are gone, version unmoved
+    catalog.crashHook = _ => ()
+    // the table is bit-exactly at v1: a read scans v1's files (same names,
+    // sizes AND mtimes) and nothing the dead writer left, version unmoved
     assert(catalog.version(t) == 1)
-    assert((files("AAA"), files("BBB")) == before)
-    assert(!new java.io.File(s"$wh/$t/symbol=CCC").exists())
-    assert(!new java.io.File(s"$wh/$t.pv1").exists())
-    assert(!new java.io.File(s"$wh/$t.staging").exists())
+    assert(unlisted(wh, t).exists(_.startsWith("symbol=CCC/")))
+    assert(scanned(catalog.read(t), t) == v1)
+    assert(stamps(wh, t, v1) == before)
     // retry applies normally and the pre-image is versioned
     up(mkRow("AAA", "2026-01-01", 11.0, "2026-01-03 00:00:00"),
       mkRow("CCC", "2026-01-01", 30.0, "2026-01-03 00:00:00"))
     assert(catalog.version(t) == 2)
     assert(catalog.readAsOf(t, 1).count() == 2)
     assert(catalog.read(t).count() == 3)
-    val v1 = catalog.readAsOf(t, 1).collect()
+    val rows1 = catalog.readAsOf(t, 1).collect()
       .map(r => r.getAs[String]("symbol") -> r.getAs[Double]("close")).toMap
-    assert(v1 == Map("AAA" -> 10.0, "BBB" -> 20.0))
+    assert(rows1 == Map("AAA" -> 10.0, "BBB" -> 20.0))
+    assert(unlisted(wh, t).isEmpty && stages(wh, t).isEmpty)
   }
 
   test("partitioned compaction is a versioned commit: history survives the rewrite") {
-    // mixing upserts and compaction must keep ONE version scheme — the
-    // old compact wrote a whole-table .v<N> archive the partitioned
-    // readAsOf dispatcher never consults, silently breaking numbering
+    // mixing upserts and compaction must keep ONE version scheme: a
+    // compaction is a commit like any other, numbered in the same log
     val wh = tmpDir("graft-pvcompact")
     val catalog = new Catalog(spark, wh)
     val t = Schemas.tables.bronze
@@ -319,6 +322,7 @@ class CatalogUpsertSpec extends SparkTestBase {
     assert(snap(2) == Map("AAA" -> 11.0, "BBB" -> 20.0))
     assert(snap(3) == Map("AAA" -> 11.0, "BBB" -> 20.0),
       "compaction preserves rows — v3 == v2 content in fewer files")
+    assert(listed(wh, t, 3).size == 2, "one compacted file per partition")
     // a further upsert versions on top of the compacted image
     up(mkRow("BBB", "2026-01-01", 21.0, "2026-01-04 00:00:00"))
     assert(catalog.version(t) == 4)
@@ -335,57 +339,28 @@ class CatalogUpsertSpec extends SparkTestBase {
       d.collect().map(r => r.getAs[String]("symbol") -> r.getAs[Double]("close")).toMap
     ow(mkRow("AAA", "2026-01-01", 10.0, "2026-01-02 00:00:00"),
       mkRow("BBB", "2026-01-01", 20.0, "2026-01-02 00:00:00"))
-    // the new image replaces AAA, drops BBB and adds CCC; die with every
-    // live partition archived and nothing promoted
-    catalog.crashHook = () => throw new RuntimeException("simulated crash")
+    // the new image replaces AAA, drops BBB and adds CCC; die with its
+    // files renamed in and no manifest written
+    catalog.crashHook = { case "moved" => throw new RuntimeException("simulated crash")
+                          case _ => }
     intercept[RuntimeException] {
       ow(mkRow("AAA", "2026-01-01", 11.0, "2026-01-03 00:00:00"),
         mkRow("CCC", "2026-01-01", 30.0, "2026-01-03 00:00:00"))
     }
-    catalog.crashHook = () => ()
+    catalog.crashHook = _ => ()
     assert(snap(catalog.read(t)) == Map("AAA" -> 10.0, "BBB" -> 20.0))
     assert(catalog.version(t) == 1)
-    assert(!new java.io.File(s"$wh/$t/symbol=CCC").exists())
-    assert(!new java.io.File(s"$wh/$t.pv1").exists())
-    assert(!new java.io.File(s"$wh/$t.staging").exists())
+    assert(scanned(catalog.read(t), t) == listed(wh, t, 1))
     // retry lands as a versioned commit: the old image stays readable
     ow(mkRow("AAA", "2026-01-01", 11.0, "2026-01-03 00:00:00"),
       mkRow("CCC", "2026-01-01", 30.0, "2026-01-03 00:00:00"))
     assert(catalog.version(t) == 2)
     assert(snap(catalog.read(t)) == Map("AAA" -> 11.0, "CCC" -> 30.0))
-    assert(!new java.io.File(s"$wh/$t/symbol=BBB").exists())
+    // BBB's files leave the current version but stay for version 1
+    assert(!listed(wh, t, 2).exists(_.startsWith("symbol=BBB/")))
+    assert(listed(wh, t, 1).exists(_.startsWith("symbol=BBB/")))
     assert(snap(catalog.readAsOf(t, 1)) == Map("AAA" -> 10.0, "BBB" -> 20.0))
-  }
-
-  test("a reader on another Catalog waits out a commit in flight instead of rolling it back") {
-    // Two Catalogs on one warehouse in one JVM; writers in other JVMs are
-    // not coordinated. The reader starts inside the commit's worst window
-    // (every pre-image archived, nothing promoted), where its heal would
-    // take the writer for dead and undo the half-commit.
-    val wh = tmpDir("graft-inflight")
-    val writer = new Catalog(spark, wh)
-    val reader = new Catalog(spark, wh)
-    val t = Schemas.tables.silver
-    writer.overwrite(df(mkRow("AAA", "2026-01-01", 10.0, "2026-01-02 00:00:00"),
-      mkRow("BBB", "2026-01-01", 20.0, "2026-01-02 00:00:00")), t, Seq("symbol"))
-    val read = scala.concurrent.Promise[Long]()
-    var blocked = false
-    var readerThread: Thread = null
-    writer.crashHook = () => {
-      readerThread = new Thread(() => read.complete(scala.util.Try(reader.read(t).count())))
-      readerThread.start()
-      readerThread.join(300)
-      blocked = readerThread.isAlive
-    }
-    writer.overwrite(df(mkRow("AAA", "2026-01-01", 11.0, "2026-01-03 00:00:00"),
-      mkRow("BBB", "2026-01-01", 21.0, "2026-01-03 00:00:00"),
-      mkRow("CCC", "2026-01-01", 30.0, "2026-01-03 00:00:00")), t, Seq("symbol"))
-    writer.crashHook = () => ()
-    readerThread.join()
-    assert(blocked, "the reader must wait while the commit holds the table")
-    assert(writer.version(t) == 2)
-    assert(read.future.value.get.get == 3L, "the reader sees the committed image")
-    assert(reader.read(t).count() == 3L)
+    assert(unlisted(wh, t).isEmpty && stages(wh, t).isEmpty)
   }
 
   test("an empty overwrite reads back empty under the declared schema, at every version") {
@@ -409,5 +384,53 @@ class CatalogUpsertSpec extends SparkTestBase {
     check(catalog.readAsOf(t, 1), 0)
     check(catalog.readAsOf(t, 2), 1)
     check(catalog.readAsOf(t, 3), 0)
+  }
+
+  test("append is a versioned commit: each version replays the appends before it") {
+    import spark.implicits._
+    val wh = tmpDir("graft-append")
+    val catalog = new Catalog(spark, wh)
+    def ids(d: org.apache.spark.sql.DataFrame): Set[Int] = d.as[Int].collect().toSet
+    catalog.overwrite(Seq(1).toDF("id"), "t", Nil)
+    catalog.overwrite(Seq(2).toDF("id"), "t", Nil)
+    catalog.append(Seq(3).toDF("id"), "t", Nil)
+    assert(catalog.version("t") == 3)
+    assert(ids(catalog.readAsOf("t", 1)) == Set(1))
+    assert(ids(catalog.readAsOf("t", 2)) == Set(2))
+    assert(ids(catalog.read("t")) == Set(2, 3))
+  }
+
+  test("two writers on one table: one lands, the other raises and leaves nothing behind") {
+    val wh = tmpDir("graft-2writers")
+    val a = new Catalog(spark, wh)
+    val b = new Catalog(spark, wh)
+    val t = Schemas.tables.bronze
+    def up(c: Catalog, rows: Row*): Unit =
+      c.upsert(df(rows: _*), t, keys = Seq("symbol", "date"), partitionBy = Seq("symbol"))
+    up(a, mkRow("AAA", "2026-01-01", 10.0, "2026-01-02 00:00:00"),
+      mkRow("BBB", "2026-01-01", 20.0, "2026-01-02 00:00:00"))
+    // A has merged against version 1 and written its files; B's whole
+    // upsert runs, on another thread, before A takes the commit lock
+    val bDone = scala.concurrent.Promise[Unit]()
+    a.crashHook = {
+      case "staged" =>
+        val th = new Thread(() => bDone.complete(scala.util.Try(
+          up(b, mkRow("AAA", "2026-01-01", 12.0, "2026-01-03 00:00:00"),
+            mkRow("CCC", "2026-01-01", 30.0, "2026-01-03 00:00:00")))))
+        th.start()
+        th.join(120000)
+      case _ =>
+    }
+    intercept[java.util.ConcurrentModificationException] {
+      up(a, mkRow("AAA", "2026-01-01", 11.0, "2026-01-03 00:00:00"),
+        mkRow("BBB", "2026-01-01", 21.0, "2026-01-03 00:00:00"))
+    }
+    a.crashHook = _ => ()
+    assert(bDone.future.value.exists(_.isSuccess), s"B did not land: ${bDone.future.value}")
+    assert(a.version(t) == 2)
+    val rows = a.read(t).collect()
+      .map(r => r.getAs[String]("symbol") -> r.getAs[Double]("close")).toMap
+    assert(rows == Map("AAA" -> 12.0, "BBB" -> 20.0, "CCC" -> 30.0), "the table is B's merge")
+    assert(unlisted(wh, t).isEmpty && stages(wh, t).isEmpty)
   }
 }

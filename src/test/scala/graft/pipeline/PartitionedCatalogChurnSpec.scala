@@ -5,28 +5,33 @@ import graft.SparkTestBase
 import org.apache.spark.sql.Row
 
 /** Model-based churn for the catalog's one commit protocol (q365's
-  * commit-by-rename): a seeded sequence of random writes — partitioned
+  * manifest commit): a seeded sequence of random writes — partitioned
   * upserts, unpartitioned upserts, or partitioned overwrites — a third
-  * of them killed at the WORST crash window (pre-images archived,
-  * nothing promoted), is replayed against a plain-Scala model of the
+  * of them killed at a commit step (files staged; files in place with
+  * no manifest, the worst window; manifest claimed with cleanup not
+  * run; in turn), is replayed against a plain-Scala model of the
   * MERGE / overwrite semantics. Invariants after every step:
   *
-  *   - a crashed write leaves the table bit-readable at its prior
-  *     version (version number unmoved, live rows == model) and the
-  *     retry lands as if the crash never happened;
-  *   - the live directory holds exactly the current version's data
-  *     files: no staging, no half-archive, no orphan a read would skip;
+  *   - a crashed write leaves the table at exactly its prior version N
+  *     (before the claim) or the write's version N+1 (after it), bit-
+  *     readable with live rows == model, and the retry lands as if the
+  *     crash never happened;
+  *   - a read scans exactly the current manifest's files, and after a
+  *     commit no staged write and no file that no manifest lists is left;
+  *   - a partitioned upsert's version lists the previous version's files
+  *     of every partition it did not touch: shared, not copied;
   *   - every version inside the retention horizon replays EXACTLY
   *     (readAsOf == the model's snapshot at that version, read from the
-  *     very files that version had live);
+  *     very files, same sizes and mtimes, that version had live);
   *   - a version beyond retention fails loudly, never silently wrong.
   *
   * The q365 gate proves one two-version derivation against DuckDB; this
   * spec walks the protocol through a dozen commits with interleaved
   * failures — the shapes a single derivation can't reach (repeated
-  * crash-retry cycles, archive pruning under churn, partitions created
+  * crash-retry cycles, pruning under churn, partitions created
   * mid-history then updated or dropped, multi-partition batches). */
 class PartitionedCatalogChurnSpec extends SparkTestBase {
+  import CatalogLayout._
 
   private def df(rows: Seq[Row]) =
     spark.createDataFrame(
@@ -40,27 +45,11 @@ class PartitionedCatalogChurnSpec extends SparkTestBase {
     Row(symbol, Date.valueOf(date), close, close + 1, close - 1, close, 100L,
       "churn", Timestamp.valueOf("2026-01-01 00:00:00"), "f.csv")
 
-  /** Walks every regular file under `root` that Spark would read (no
-    * `_`/`.`-prefixed name on the way), as paths relative to `root`. */
-  private def dataFiles(root: java.io.File): Set[String] = {
-    def walk(f: java.io.File, rel: String): Seq[String] =
-      if (f.getName.startsWith("_") || f.getName.startsWith(".")) Nil
-      else if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).toSeq
-        .flatMap(c => walk(c, s"$rel/${c.getName}"))
-      else Seq(rel)
-    Option(root.listFiles()).getOrElse(Array.empty).toSeq.flatMap(c => walk(c, c.getName)).toSet
-  }
-
-  /** The table's files as Spark reads them, relative to the table root or
-    * archive they sit in: archived files keep their relative path, so the
-    * set names one image whether it is read live or by version. */
-  private def readFiles(df: org.apache.spark.sql.DataFrame, t: String): Set[String] = {
-    val root = ("^.*/" + java.util.regex.Pattern.quote(t) + "(\\.pv\\d+)?/").r
-    df.inputFiles.map(f => root.replaceFirstIn(new java.net.URI(f).getPath, "")).toSet
-  }
+  /** The commit steps a crash is injected at, in turn. */
+  private val steps = Seq("staged", "moved", "claimed")
 
   /** One seeded churn of 12 writes on a fresh table — a third of them
-    * killed at the commit's worst window — checked against the model.
+    * killed at a commit step — checked against the model.
     * `partitioned`: symbol partitions, else one flat directory of files;
     * `overwrite`: each write replaces the table with the batch, else it
     * MERGEs the batch in. */
@@ -68,18 +57,17 @@ class PartitionedCatalogChurnSpec extends SparkTestBase {
     val wh = tmpDir("graft-pchurn")
     val catalog = new Catalog(spark, wh)
     val t = Schemas.tables.bronze
-    val live = new java.io.File(s"$wh/$t")
     val partitionBy = if (partitioned) Seq("symbol") else Nil
     val rng = new scala.util.Random(0xC4A5E14L)
     val symbols = Vector("AAA", "BBB", "CCC", "DDD", "EEE")
     val dates = Vector("2026-01-01", "2026-01-02")
 
-    // the model: committed snapshots and their live data files, version v
-    // at index v-1
+    // the model: committed snapshots and their files with sizes and
+    // mtimes, version v at index v-1
     var state = Map.empty[(String, String), Double]
     var nCrashes = 0
     val snapshots = scala.collection.mutable.ArrayBuffer.empty[Map[(String, String), Double]]
-    val images = scala.collection.mutable.ArrayBuffer.empty[Set[String]]
+    val images = scala.collection.mutable.ArrayBuffer.empty[Map[String, (Long, Long)]]
 
     def rowsOf(df: org.apache.spark.sql.DataFrame): Map[(String, String), Double] =
       df.collect().map { r =>
@@ -89,17 +77,27 @@ class PartitionedCatalogChurnSpec extends SparkTestBase {
     def write(rows: Seq[Row]): Unit =
       if (overwrite) catalog.overwrite(df(rows), t, partitionBy)
       else catalog.upsert(df(rows), t, keys = Seq("symbol", "date"), partitionBy)
-    // the live directory holds exactly the version's data files: nothing
-    // staged, no half-archive, no orphan beside what a read scans
-    def assertLiveIsImage(step: Int, image: Set[String]): Unit = {
-      val table = catalog.read(t)
-      assert(dataFiles(live) == image, s"step $step: live files != version image")
-      assert(readFiles(table, t) == image, s"step $step: orphan data files in live dir")
-      assert(!new java.io.File(s"$wh/$t.staging").exists(), s"step $step: staging left")
-      val archives = Option(new java.io.File(wh).listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith(s"$t.pv"))
-      assert(archives.forall(a => new java.io.File(a, "_committed").exists()),
-        s"step $step: an uncommitted archive survived")
+    // a read scans exactly the current manifest's files
+    def assertReadIsImage(step: Int): Unit = {
+      val v = catalog.version(t)
+      assert(scanned(catalog.read(t), t) == listed(wh, t, v), s"step $step: read != manifest")
+    }
+    // a version landed: the model advances with it
+    def landed(step: Int, written: Map[(String, String), Double]): Unit = {
+      state = if (overwrite) written else state ++ written
+      snapshots += state
+      val v = snapshots.size.toLong
+      assert(catalog.version(t) == v, s"step $step: version != commit count")
+      if (partitioned && !overwrite && v > 1) {
+        val touched = written.keySet.map(_._1)
+        def untouched(k: Long) = listed(wh, t, k).filterNot(f =>
+          touched.exists(s => f.startsWith(s"symbol=$s/")))
+        assert(untouched(v) == untouched(v - 1),
+          s"step $step: untouched partitions were not shared")
+      }
+      images += stamps(wh, t, listed(wh, t, v))
+      assert(rowsOf(catalog.read(t)) == state, s"step $step: live read != model")
+      assertReadIsImage(step)
     }
 
     (1 to 12).foreach { step =>
@@ -113,39 +111,44 @@ class PartitionedCatalogChurnSpec extends SparkTestBase {
       val keyed = batch.groupBy(b => (b._1, b._2)).map(_._2.head).toSeq
       val rows = keyed.map { case (s, d, c) => mkRow(s, d, c) }
 
+      val written = keyed.map { case (s, d, c) => (s, d) -> c }.toMap
+
       val crash = snapshots.nonEmpty && rng.nextInt(3) == 0
       if (crash) {
+        val at = steps(nCrashes % steps.size)
         nCrashes += 1
-        catalog.crashHook = () => throw new RuntimeException("injected crash")
+        catalog.crashHook = h => if (h == at) throw new RuntimeException("injected crash")
         intercept[RuntimeException](write(rows))
-        catalog.crashHook = () => ()
-        // table must be bit-readable at the PRIOR committed state
-        assert(catalog.version(t) == snapshots.size.toLong,
-          s"step $step: version moved across a crash")
-        assert(rowsOf(catalog.read(t)) == state, s"step $step: live rows corrupted by crash")
-        assertLiveIsImage(step, images.last)
+        catalog.crashHook = _ => ()
+        if (at == "claimed") landed(step, written) // the claim is the commit
+        else {
+          // the table is bit-readable at the PRIOR committed version
+          assert(catalog.version(t) == snapshots.size.toLong,
+            s"step $step: version moved across a crash at $at")
+          assert(rowsOf(catalog.read(t)) == state, s"step $step: live rows corrupted by crash")
+          assertReadIsImage(step)
+        }
       }
-      // the (possibly retried) write lands
+      // the (possibly retried) write lands, and no staged write or file
+      // that no manifest lists survives it
       write(rows)
-      val written = keyed.map { case (s, d, c) => (s, d) -> c }.toMap
-      state = if (overwrite) written else state ++ written
-      snapshots += state
-      images += dataFiles(live)
-      assert(catalog.version(t) == snapshots.size.toLong,
-        s"step $step: version != commit count")
-      assert(rowsOf(catalog.read(t)) == state, s"step $step: live read != model")
-      assertLiveIsImage(step, images.last)
+      landed(step, written)
+      assert(unlisted(wh, t).isEmpty, s"step $step: unlisted files survived the commit")
+      assert(stages(wh, t).isEmpty, s"step $step: a staged write survived the commit")
     }
 
     // every version in the retention horizon replays exactly, from the
     // very files it had live; beyond it the read fails loudly
-    // (retainVersions = 3 archives -> 4 readable)
+    // (retainVersions = 3 -> the current version and the 3 before it)
     val cur = snapshots.size.toLong
     val oldestReadable = math.max(1L, cur - 3)
+    assert(versions(wh, t) == (oldestReadable to cur))
     (oldestReadable to cur).foreach { v =>
       val asOf = catalog.readAsOf(t, v)
+      val image = images((v - 1).toInt)
       assert(rowsOf(asOf) == snapshots((v - 1).toInt), s"version $v replay != model snapshot")
-      assert(readFiles(asOf, t) == images((v - 1).toInt), s"version $v read other files")
+      assert(scanned(asOf, t) == image.keySet, s"version $v read other files")
+      assert(stamps(wh, t, image.keySet) == image, s"version $v files were rewritten")
     }
     assertThrows[IllegalArgumentException] {
       catalog.readAsOf(t, oldestReadable - 1).collect()
@@ -164,5 +167,43 @@ class PartitionedCatalogChurnSpec extends SparkTestBase {
 
   test("12 random partitioned OVERWRITES with injected crashes: every retained version replays") {
     churn(partitioned = true, overwrite = true)
+  }
+
+  test("60-commit churn: flat commit cost, bounded disk, correct final state") {
+    // a long-lived writer commits many versions of one table, the shape a
+    // daily medallion refresh traces over months. Each commit reads the
+    // base manifest and the retained window, never the history, so its
+    // cost stays flat; pruning keeps the log and the data files bounded
+    // while the retained versions stay readable.
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{count, lit, max}
+    val wh = tmpDir("graft-churn")
+    val catalog = new Catalog(spark, wh)
+    val times = Array.ofDim[Double](60)
+    for (i <- 0 until 60) {
+      val df = Seq.tabulate(50)(j => (j.toLong, i.toLong)).toDF("k", "commit_no")
+      val t0 = System.nanoTime()
+      catalog.overwrite(df, "churn_t", Nil)
+      times(i) = (System.nanoTime() - t0) / 1e9
+    }
+    // (a) flat-ish: the last 10 commits must not cost materially more than
+    // the first 10 (generous 5x guard — the claim is a bounded number of
+    // manifest reads per commit, not wall-clock stability of a noisy box)
+    val first = times.take(10).sum / 10
+    val last = times.takeRight(10).sum / 10
+    info(f"commit mean: first10 $first%.3f s, last10 $last%.3f s")
+    assert(last <= first * 5,
+      f"commit cost grew with history: $first%.3f -> $last%.3f s")
+    // (b) disk bounded: the current version and the 3 retained before it,
+    // and exactly their files
+    assert(versions(wh, "churn_t") == (57L to 60L))
+    assert(onDisk(wh, "churn_t") == (57L to 60L).flatMap(listed(wh, "churn_t", _)).toSet)
+    // (c) correctness: the latest read is the last commit, exactly
+    val got = catalog.read("churn_t").agg(count(lit(1)), max($"commit_no")).collect().head
+    assert((got.getLong(0), got.getLong(1)) == (50L, 59L), got.toString)
+    // retained time travel still works after all the churn
+    val prev = catalog.readAsOf("churn_t", 59).agg(max($"commit_no")).collect().head.getLong(0)
+    assert(prev == 58L, s"time travel read $prev")
+    intercept[IllegalArgumentException](catalog.readAsOf("churn_t", 56))
   }
 }

@@ -4,8 +4,8 @@ import graft.SparkTestBase
 
 /** [[TableDiff]] classification on hand-built snapshots (including the
   * `removed` path the append-only q96 gate can never produce) and the
-  * CDC integration: diffing two real [[VersionedCatalog]] commits via
-  * time travel. */
+  * CDC integration: diffing two real [[Catalog]] versions via time
+  * travel. */
 class TableDiffSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -29,14 +29,14 @@ class TableDiffSpec extends SparkTestBase {
     assert(got === Map(2L -> "changed"))
   }
 
-  test("diff of two VersionedCatalog commits is the change feed between them") {
-    val cat = new VersionedCatalog(spark, tmpDir("vcat-diff"))
-    val c1 = cat.publish(Map("dim" ->
-      Seq((1L, "gold"), (2L, "silver"), (3L, "bronze")).toDF("id", "tier")))
-    val c2 = cat.publish(Map("dim" ->
-      Seq((1L, "gold"), (2L, "platinum"), (4L, "silver")).toDF("id", "tier")))
+  test("diff of two Catalog versions is the change feed between them") {
+    val cat = new Catalog(spark, tmpDir("cat-diff"))
+    cat.overwrite(Seq((1L, "gold"), (2L, "silver"), (3L, "bronze")).toDF("id", "tier"),
+      "dim", Nil)
+    cat.overwrite(Seq((1L, "gold"), (2L, "platinum"), (4L, "silver")).toDF("id", "tier"),
+      "dim", Nil)
     val feed = TableDiff.diff(
-        cat.read("dim", asOfCommit = c1), cat.read("dim", asOfCommit = c2),
+        cat.readAsOf("dim", 1), cat.readAsOf("dim", 2),
         Seq("id"), Seq("tier"))
       .select("id", "change_type", "old_tier", "new_tier")
       .as[(Long, String, Option[String], Option[String])].collect()

@@ -10,8 +10,8 @@ import org.apache.spark.sql.streaming.Trigger
   * reference pipeline's production shape (continuous loads MERGEd into a
   * symbol-partitioned Delta bronze with time travel) end to end on this
   * engine's pieces: a bounded file replay drives `foreachBatch`, every
-  * micro-batch lands through `Catalog.upsert`'s partitioned
-  * commit-by-rename, and afterwards EVERY batch boundary is a readable
+  * micro-batch lands through `Catalog.upsert`'s partitioned manifest
+  * commit, and afterwards EVERY batch boundary is a readable
   * version whose content equals the cumulative MERGE of the batches up
   * to it. Pins the composition the unit specs can't: exactly-once-shaped
   * replay ordering (batch k's pre-image is version k), touched-partition
@@ -74,8 +74,10 @@ class StreamingVersionedUpsertSpec extends SparkTestBase {
     assert(snap(2) == Map("AAA" -> 11.0, "BBB" -> 20.0))
     assert(snap(3) == Map("AAA" -> 11.0, "BBB" -> 21.0, "CCC" -> 30.0))
     // partition isolation held under the stream: batch 2 touched only
-    // AAA, so BBB's files are identical between v1's read and v2's read
-    assert(new java.io.File(s"$wh/$t.pv1/symbol=AAA").exists())
-    assert(!new java.io.File(s"$wh/$t.pv1/symbol=BBB").exists())
+    // AAA, so version 2 lists version 1's very BBB files and new AAA ones
+    def in(v: Long, sym: String) =
+      graft.pipeline.CatalogLayout.listed(wh, t, v).filter(_.startsWith(s"symbol=$sym/"))
+    assert(in(2, "BBB") == in(1, "BBB") && in(1, "BBB").nonEmpty)
+    assert(in(2, "AAA").intersect(in(1, "AAA")).isEmpty)
   }
 }
