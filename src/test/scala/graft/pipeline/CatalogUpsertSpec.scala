@@ -100,7 +100,9 @@ class CatalogUpsertSpec extends SparkTestBase {
     assert(out.filter(col("d") === 2).count() == n) // all inserts landed
   }
 
-  test("a crash mid-commit never loses the table: it stays at its version, retry lands") {
+  // the dead writer's files are healed away by the next commit's cleanup;
+  // until then the manifest keeps readers on the prior version
+  test("a crash mid-swap never loses the table: heal restores, retry lands") {
     val wh = tmpDir("graft-upsert3")
     val catalog = new Catalog(spark, wh)
     val t = Schemas.tables.bronze
