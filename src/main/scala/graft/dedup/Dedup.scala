@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.Pins
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -94,118 +95,98 @@ object Dedup {
                           maxIters: Int = 50): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    // localCheckpoint persists an RDD per round; without explicit cleanup
-    // every superseded round's labels stay pinned in the block manager
-    // until a driver GC, competing with the job for memory at exactly the
-    // corpus sizes this loop exists for. Ownership is identified by
-    // walking the checkpointed frame's own RDD lineage to its persisted
-    // ancestors — never by diffing global persistent-RDD state, which
-    // would race with concurrent jobs and free THEIR checkpoints.
-    def tracked(df: DataFrame, eager: Boolean = true): (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
-      val out = df.localCheckpoint(eager)
-      def persisted(r: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.rdd.RDD[_]] =
-        if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE) Seq(r)
-        else r.dependencies.flatMap(d => persisted(d.rdd))
-      (out, persisted(out.queryExecution.toRdd).distinct)
-    }
-    def free(rdds: Seq[org.apache.spark.rdd.RDD[_]]): Unit =
-      rdds.foreach(_.unpersist(blocking = false))
-
-    // materialize the pair list once BEFORE symmetrizing: both branches
-    // of the union would otherwise recompute the caller's candidate
-    // pipeline (banded joins, signature aggs) in full. The symmetric view
-    // itself stays lazy — a union of the checkpointed blocks with their
-    // column swap is a narrow re-read, not worth a second materialization.
-    val (p0, edgeIds) = tracked(
-      pairs.select(col(aCol).as("__src"), col(bCol).as("__dst")))
-    val edges = p0.union(p0.select($"__dst".as("__src"), $"__src".as("__dst")))
-    // round 0 fused into initialization: label(v) = min(v, min neighbor)
-    // is one groupBy over the symmetric edge list — no join, and it both
-    // enumerates the node set and completes the first propagation round
-    var (labels, labelIds) = tracked(
-      edges.groupBy($"__src").agg(min($"__dst").as("__m"))
+    Pins.scope(spark) { pins =>
+      // materialize the pair list once BEFORE symmetrizing: both branches
+      // of the union would otherwise recompute the caller's candidate
+      // pipeline (banded joins, signature aggs) in full. The symmetric view
+      // itself stays lazy — a union of the checkpointed blocks with their
+      // column swap is a narrow re-read, not worth a second materialization.
+      val p0 = pins(pairs.select(col(aCol).as("__src"), col(bCol).as("__dst")))
+      val edges = p0.union(p0.select($"__dst".as("__src"), $"__src".as("__dst")))
+      // round 0 fused into initialization: label(v) = min(v, min neighbor)
+      // is one groupBy over the symmetric edge list — no join, and it both
+      // enumerates the node set and completes the first propagation round
+      var labels = pins(edges.groupBy($"__src").agg(min($"__dst").as("__m"))
         .select($"__src".as("__id"), least($"__src", $"__m").as("__lbl")))
-    // One propagation layer over (__id, __lbl, __prev): each node takes the
-    // minimum of its own label, its neighbors' labels, and — pointer
-    // jumping — its label's own label. The jump branch is what makes
-    // convergence O(log diameter) instead of O(diameter): a node's reach
-    // doubles each layer by adopting whatever its current representative
-    // has already learned. Both invariants that make the shortcut safe
-    // hold inductively: every label IS a node id of the same component
-    // (so the jump join always finds a row and never crosses components),
-    // and lbl(u) <= u (so jumping only ever lowers a label, never raises
-    // it). __prev (the label at round entry) rides the __own-tagged union
-    // branch untouched, so after stacking layers the round compares
-    // first-to-last: labels only decrease, hence __lbl < __prev iff ANY
-    // stacked layer changed this node.
-    def layer(cur: DataFrame): DataFrame = {
-      val lab = cur.select($"__id", $"__lbl")
-      val nullPrev = lit(null).cast(cur.schema("__prev").dataType)
-      // Both branches are lookups INTO the label table — "what is the
-      // label of my neighbor" (probe key: edge destination) and "what is
-      // the label of my label" (probe key: own label). Unioning the probe
-      // relations BEFORE the lookup means a layer pays ONE equi-join
-      // instead of two; on an iterative operator every avoided exchange
-      // is paid back once per round, and round count x stage latency is
-      // exactly what dominates the loop (locally as AQE re-planning
-      // pauses, on a cluster as scheduler barriers).
-      val probes = edges.select($"__dst".as("__k"), $"__src".as("__nid"))
-        .union(lab.select($"__lbl".as("__k"), $"__id".as("__nid")))
-      val hits = probes
-        .join(lab.select($"__id".as("__lk"), $"__lbl"), $"__k" === $"__lk")
-        .select($"__nid", $"__lbl", nullPrev.as("__prev"),
-          lit(false).as("__own"))
-      cur.select($"__id".as("__nid"), $"__lbl", $"__prev", lit(true).as("__own"))
-        .union(hits)
-        .groupBy($"__nid")
-        .agg(min($"__lbl").as("__lbl"),
-          min(when($"__own", $"__prev")).as("__prev"))
-        .select($"__nid".as("__id"), $"__lbl", $"__prev")
+      // One propagation layer over (__id, __lbl, __prev): each node takes the
+      // minimum of its own label, its neighbors' labels, and — pointer
+      // jumping — its label's own label. The jump branch is what makes
+      // convergence O(log diameter) instead of O(diameter): a node's reach
+      // doubles each layer by adopting whatever its current representative
+      // has already learned. Both invariants that make the shortcut safe
+      // hold inductively: every label IS a node id of the same component
+      // (so the jump join always finds a row and never crosses components),
+      // and lbl(u) <= u (so jumping only ever lowers a label, never raises
+      // it). __prev (the label at round entry) rides the __own-tagged union
+      // branch untouched, so after stacking layers the round compares
+      // first-to-last: labels only decrease, hence __lbl < __prev iff ANY
+      // stacked layer changed this node.
+      def layer(cur: DataFrame): DataFrame = {
+        val lab = cur.select($"__id", $"__lbl")
+        val nullPrev = lit(null).cast(cur.schema("__prev").dataType)
+        // Both branches are lookups INTO the label table — "what is the
+        // label of my neighbor" (probe key: edge destination) and "what is
+        // the label of my label" (probe key: own label). Unioning the probe
+        // relations BEFORE the lookup means a layer pays ONE equi-join
+        // instead of two; on an iterative operator every avoided exchange
+        // is paid back once per round, and round count x stage latency is
+        // exactly what dominates the loop (locally as AQE re-planning
+        // pauses, on a cluster as scheduler barriers).
+        val probes = edges.select($"__dst".as("__k"), $"__src".as("__nid"))
+          .union(lab.select($"__lbl".as("__k"), $"__id".as("__nid")))
+        val hits = probes
+          .join(lab.select($"__id".as("__lk"), $"__lbl"), $"__k" === $"__lk")
+          .select($"__nid", $"__lbl", nullPrev.as("__prev"),
+            lit(false).as("__own"))
+        cur.select($"__id".as("__nid"), $"__lbl", $"__prev", lit(true).as("__own"))
+          .union(hits)
+          .groupBy($"__nid")
+          .agg(min($"__lbl").as("__lbl"),
+            min(when($"__own", $"__prev")).as("__prev"))
+          .select($"__nid".as("__id"), $"__lbl", $"__prev")
+      }
+      var converged = false
+      var iter = 1 // initialization already performed round 1
+      while (!converged && iter < maxIters) {
+        // ONE propagation layer per materialized round. Stacking layers
+        // between barriers was measured and REJECTED: each layer references
+        // its input three times (own/probe/lookup), so an L-layer stack
+        // grows the unanalyzed plan ~3^L-fold and analysis+AQE planning
+        // cost eats the saved barrier several times over (2 layers: +40%
+        // wall, 4 layers: +2x on the gated graphs). Convergence detection
+        // is plain column comparison on the label's own type: it works
+        // identically for long, string (UUID), or any orderable id type,
+        // where a numeric cast would turn string labels into NULLs and
+        // declare convergence after one round (silent under-merge).
+        // A jump-only contraction appended to each round (lbl := lbl(lbl) on
+        // the layer's output, one extra labels-sized equi-join) was also
+        // measured and REJECTED: rounds dropped only ~15-20% (the gated
+        // graphs' slow tails are bushy, not pure chains, so the in-layer
+        // pointer jump already captures most of the shortcutting) while
+        // per-round cost rose ~40% — q67 4.7->5.0 s, q69 4.8->5.6 s warm.
+        val stacked = layer(labels.withColumn("__prev", $"__lbl"))
+        val next = pins(stacked.select($"__id", $"__lbl",
+            // every __nid has exactly one __own row, so __prev is only
+            // null for a node absent from `labels` — impossible here, but
+            // count it as changed rather than converged if it ever happens
+            coalesce(($"__lbl" < $"__prev").cast("long"), lit(1L)).as("__chg")),
+          eager = false)
+        // lazy checkpoint: this one aggregate job BOTH materializes the
+        // round's labels into the block manager AND returns the changed
+        // count — one job per round, not materialize + re-scan
+        val changed = next.agg(coalesce(sum($"__chg"), lit(0L)))
+          .collect()(0).getLong(0)
+        converged = changed == 0L
+        labels = next
+        pins.sweep(p0, labels)
+        iter += 1
+      }
+      if (!converged)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIters rounds; raise " +
+            "maxIters — returning would silently under-merge components")
+      labels.select($"__id", $"__lbl")
     }
-    var converged = false
-    var iter = 1 // initialization already performed round 1
-    while (!converged && iter < maxIters) {
-      // ONE propagation layer per materialized round. Stacking layers
-      // between barriers was measured and REJECTED: each layer references
-      // its input three times (own/probe/lookup), so an L-layer stack
-      // grows the unanalyzed plan ~3^L-fold and analysis+AQE planning
-      // cost eats the saved barrier several times over (2 layers: +40%
-      // wall, 4 layers: +2x on the gated graphs). Convergence detection
-      // is plain column comparison on the label's own type: it works
-      // identically for long, string (UUID), or any orderable id type,
-      // where a numeric cast would turn string labels into NULLs and
-      // declare convergence after one round (silent under-merge).
-      // A jump-only contraction appended to each round (lbl := lbl(lbl) on
-      // the layer's output, one extra labels-sized equi-join) was also
-      // measured and REJECTED: rounds dropped only ~15-20% (the gated
-      // graphs' slow tails are bushy, not pure chains, so the in-layer
-      // pointer jump already captures most of the shortcutting) while
-      // per-round cost rose ~40% — q67 4.7->5.0 s, q69 4.8->5.6 s warm.
-      val stacked = layer(labels.withColumn("__prev", $"__lbl"))
-      val (next, nextIds) = tracked(
-        stacked.select($"__id", $"__lbl",
-          // every __nid has exactly one __own row, so __prev is only
-          // null for a node absent from `labels` — impossible here, but
-          // count it as changed rather than converged if it ever happens
-          coalesce(($"__lbl" < $"__prev").cast("long"), lit(1L)).as("__chg")),
-        eager = false)
-      // lazy checkpoint: this one aggregate job BOTH materializes the
-      // round's labels into the block manager AND returns the changed
-      // count — one job per round, not materialize + re-scan
-      val changed = next.agg(coalesce(sum($"__chg"), lit(0L)))
-        .collect()(0).getLong(0)
-      converged = changed == 0L
-      free(labelIds)
-      labels = next
-      labelIds = nextIds
-      iter += 1
-    }
-    free(edgeIds) // frees p0 — the returned frame depends only on the final checkpoint
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIters rounds; raise " +
-          "maxIters — returning would silently under-merge components")
-    labels.select($"__id", $"__lbl")
   }
 
   /** Merge NEW similarity pairs into an EXISTING component labeling

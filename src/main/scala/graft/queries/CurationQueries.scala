@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, QueryModule, Tables}
+import graft.{Pins, QueryDef, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -519,14 +519,13 @@ object CurationQueries extends QueryModule {
     * (doc_id, pos) join to pick up the extension token; the occurrence
     * stream shrinks monotonically round over round (apriori), so round
     * cost is bounded by the seed round. No driver collects. */
-  private def q338(s: SparkSession, dir: String): DataFrame = {
+  private def q338(s: SparkSession, dir: String): DataFrame = Pins.scope(s) { pins =>
     import s.implicits._
     val minOcc = 3L
     val cap = 7
     val docs = Tables.documents(s, dir)
       .select($"doc_id", split($"text", " ").as("w"))
-    val toks = docs.select($"doc_id", posexplode($"w").as(Seq("pos", "tok")))
-      .localCheckpoint(true)
+    val toks = pins(docs.select($"doc_id", posexplode($"w").as(Seq("pos", "tok"))))
     var occ = docs.where(size($"w") >= 4)
       .select($"doc_id", explode(expr(
         "transform(sequence(0, size(w) - 4), " +
@@ -534,13 +533,12 @@ object CurationQueries extends QueryModule {
       .select($"doc_id", $"p.i".as("i"), $"p.span".as("span"))
     var out: DataFrame = null
     for (k <- 4 to cap) {
-      val freq = occ.groupBy($"span", $"doc_id")
+      val freq = pins(occ.groupBy($"span", $"doc_id")
         .agg(count(lit(1)).as("c"))
         .groupBy($"span")
         .agg(sum($"c").as("n_occ"), count(lit(1)).as("n_docs"),
           min($"doc_id").as("first_doc"))
-        .where($"n_occ" >= minOcc)
-        .localCheckpoint(true)
+        .where($"n_occ" >= minOcc))
       val maximal =
         if (k == cap) freq
         else {
@@ -548,13 +546,12 @@ object CurationQueries extends QueryModule {
           // alias both sides: occurrence frames beyond round 4 carry toks
           // attributes in their lineage, so an unqualified re-join is an
           // ambiguous self-join
-          val next = fOcc.as("o").join(toks.as("tk"),
+          val next = pins(fOcc.as("o").join(toks.as("tk"),
               col("o.doc_id") === col("tk.doc_id") &&
                 col("tk.pos") === col("o.i") + lit(k))
             .select(col("o.doc_id").as("doc_id"), col("o.i").as("i"),
               concat(col("o.span"), lit(" "), col("tk.tok")).as("span"),
-              col("o.span").as("parent"))
-            .localCheckpoint(true)
+              col("o.span").as("parent")))
           // a (k+1)-span determines its parent (its k-token prefix), so
           // first() over the group is exact, not arbitrary
           val extendedParents = next.groupBy($"span")
@@ -568,10 +565,6 @@ object CurationQueries extends QueryModule {
         $"n_occ", $"n_docs", $"first_doc")
       out = if (out == null) tagged else out.unionByName(tagged)
     }
-    // freq/next pins feed the (deferred) anti-joins in the output and
-    // must stay; the token table's last consumer was round 6's eager
-    // `next` checkpoint — release it (round-15, guide §5)
-    graft.graph.Graph.releaseCheckpoint(toks)
     out.orderBy($"k", $"span")
   }
   private val q338Sql = {

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, QueryModule, Tables}
+import graft.{Pins, QueryDef, QueryModule, Tables}
 import graft.graph.Graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -220,9 +220,9 @@ object GraphTraversalQueries extends QueryModule {
     * perturbing scores — and deg ≥ 2 is required anyway (ln(1) = 0).
     * Scores are rounded at 6 dp BEFORE the top-k ordering, with (u, v) as
     * the total tie-break, so the LIMIT is engine-stable. */
-  private def q236(s: SparkSession, dir: String): DataFrame = {
+  private def q236(s: SparkSession, dir: String): DataFrame = Pins.scope(s) { pins =>
     import s.implicits._
-    val e = copurchaseEdges(s, dir).localCheckpoint(true)
+    val e = pins(copurchaseEdges(s, dir))
     // Per-middle neighbor ARRAYS instead of a mid-x-mid self-join: the
     // capped (deg <= 64) neighbor set of each middle w is collected once
     // (the deg prefilter runs BEFORE collect_list, so no unbounded hub
@@ -285,7 +285,7 @@ object GraphTraversalQueries extends QueryModule {
     * oracle replays the recurrence as 6 unrolled aggregation CTEs and the
     * hash gate certifies the whole iterative computation, per-round state
     * included. Unreached nodes are absent (same contract as q94). */
-  private def q250(s: SparkSession, dir: String): DataFrame = {
+  private def q250(s: SparkSession, dir: String): DataFrame = Pins.scope(s) { pins =>
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val li = Tables.lineitem(s, dir)
@@ -299,7 +299,7 @@ object GraphTraversalQueries extends QueryModule {
     // emitted raw via one explode (bake-off: 2.3 → 1.7 s warm).
     val qsum = ($"a.l_quantity".cast("long") + $"b.l_quantity".cast("long"))
       .as("w")
-    val edges = li.as("a").join(li.as("b"),
+    val edges = pins(li.as("a").join(li.as("b"),
         $"a.l_orderkey" === $"b.l_orderkey" &&
           $"b.l_linenumber" === $"a.l_linenumber" + 1 &&
           $"a.l_partkey" =!= $"b.l_partkey")
@@ -307,8 +307,7 @@ object GraphTraversalQueries extends QueryModule {
         struct($"a.l_partkey".as("src"), $"b.l_partkey".as("dst"), qsum),
         struct($"b.l_partkey".as("src"), $"a.l_partkey".as("dst"), qsum)))
         .as("x"))
-      .select($"x.src".as("src"), $"x.dst".as("dst"), $"x.w".as("w"))
-      .localCheckpoint(true)
+      .select($"x.src".as("src"), $"x.dst".as("dst"), $"x.w".as("w")))
     val sources = edges.select($"src".as("id"))
       .filter($"id" % 97 === 0).distinct()
     Graph.ssspWeighted(edges, sources, ssspRounds)
@@ -419,46 +418,30 @@ object GraphTraversalQueries extends QueryModule {
     * recurrence with scalar-subquery maxima. Non-negative inputs make
     * Spark `div` (truncate) and DuckDB `//` (floor) agree exactly — the
     * q95 precedent. */
-  private def q253(s: SparkSession, dir: String): DataFrame = {
+  private def q253(s: SparkSession, dir: String): DataFrame = Pins.scope(s) { pins =>
     import s.implicits._
-    val e = Tables.orders(s, dir).select($"o_orderkey", $"o_custkey")
+    val e = pins(Tables.orders(s, dir).select($"o_orderkey", $"o_custkey")
       .join(Tables.lineitem(s, dir).select($"l_orderkey", $"l_suppkey"),
         $"o_orderkey" === $"l_orderkey")
-      .select($"o_custkey".as("c"), $"l_suppkey".as("su")).distinct()
-      .localCheckpoint(true)
+      .select($"o_custkey".as("c"), $"l_suppkey".as("su")).distinct())
     var h = e.select($"c").distinct().select($"c", lit(1000000L).as("h"))
     var a: DataFrame = null
-    // superseded-state release (round-15, guide §5): only the LAST
-    // round's araw/hraw feed the output (a and h are projections of
-    // them); an intermediate half-round's pin is dead as soon as the
-    // next half-round's eager checkpoint has consumed it
-    var prevHraw: DataFrame = null
-    for (r <- 1 to hitsRounds) {
+    for (_ <- 1 to hitsRounds) {
       // EAGER pin, kept after a measured round trip: lazy (materialized
       // by the max-collect) saved 6 jobs and read better at sf0.1, but
       // ~15% slower at ×10 (8.45/8.31 s vs 6.65/7.55 s warm) — the next
       // half-round's join plans against an unmaterialized checkpoint
       // (no stats for AQE). Scale wins; see SCALE.md §Round 14 resumed.
-      val araw = e.join(h, "c").groupBy($"su").agg(sum($"h").as("ar"))
-        .localCheckpoint(true)
-      // araw (eager) has consumed h — the previous round's hraw is dead
-      if (prevHraw != null) graft.graph.Graph.releaseCheckpoint(prevHraw)
+      val araw = pins(e.join(h, "c").groupBy($"su").agg(sum($"h").as("ar")))
+      pins.sweep(e, araw)
       // coalesce: an empty edge list must yield empty hub/authority
       // frames, not an NPE off the null max (the q217 empty-graph lesson)
       val ma = araw.agg(coalesce(max($"ar"), lit(1L))).collect().head.getLong(0)
       a = araw.select($"su", expr(s"ar * 1000000 div $ma").as("a"))
-      val hraw = e.join(a, "su").groupBy($"c").agg(sum($"a").as("hr"))
-        .localCheckpoint(true)
-      // hraw (eager) has consumed a; araw only feeds the OUTPUT on the
-      // final round
-      if (r < hitsRounds) graft.graph.Graph.releaseCheckpoint(araw)
+      val hraw = pins(e.join(a, "su").groupBy($"c").agg(sum($"a").as("hr")))
       val mh = hraw.agg(coalesce(max($"hr"), lit(1L))).collect().head.getLong(0)
       h = hraw.select($"c", expr(s"hr * 1000000 div $mh").as("h"))
-      prevHraw = hraw
     }
-    // the output is projections of the final araw/hraw only — the edge
-    // pin is dead once the last half-round has materialized
-    graft.graph.Graph.releaseCheckpoint(e)
     h.select($"c".as("node_id"), lit("hub").as("kind"), $"h".as("score"))
       .union(a.select($"su".as("node_id"), lit("authority").as("kind"),
         $"a".as("score")))
@@ -600,50 +583,41 @@ object GraphTraversalQueries extends QueryModule {
     * — [[graft.graph.Graph]]'s discipline); the walk count is the seed
     * count, so the frontier never grows, and the oracle unrolls the same
     * 8 steps as MATERIALIZED CTEs. */
-  private def q303(s: SparkSession, dir: String): DataFrame = {
+  private def q303(s: SparkSession, dir: String): DataFrame = Pins.scope(s) { pins =>
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val steps = 8
-    val edges = copurchaseEdges(s, dir).localCheckpoint(true)
+    val edges = pins(copurchaseEdges(s, dir))
     // indexed adjacency WITH degree, pinned ONCE — the 8 rounds each make
     // one map-side pass over it against the broadcast frontier (walk count
     // = seed count, so the frontier never outgrows a broadcast): zero
     // shuffles per round, and the ranking window runs exactly once
-    val adjDeg = edges.withColumn("idx",
+    val adjDeg = pins(edges.withColumn("idx",
         row_number().over(Window.partitionBy($"src").orderBy($"dst"))
           .cast("long") - 1L)
       .withColumn("deg", count(lit(1)).over(Window.partitionBy($"src")))
-      .select($"src".as("a_src"), $"dst".as("a_dst"), $"idx", $"deg")
-      .localCheckpoint(true)
-    var cur = edges.select($"src").filter($"src" % 97 === 0).distinct()
-      .select($"src".as("walk_id"), $"src".as("v"))
-      .localCheckpoint(true)
-    // adjDeg and cur0 (both eager) are the only consumers of the edge
-    // pin — it is dead from here (round-15, guide §5)
-    graft.graph.Graph.releaseCheckpoint(edges)
+      .select($"src".as("a_src"), $"dst".as("a_dst"), $"idx", $"deg"))
+    var cur = pins(edges.select($"src").filter($"src" % 97 === 0).distinct()
+      .select($"src".as("walk_id"), $"src".as("v")))
+    pins.sweep(adjDeg, cur)
     val parts = Seq.newBuilder[DataFrame]
     parts += cur.select($"walk_id", lit(0L).as("step"), $"v".as("node"))
     for (t <- 1 to steps) {
-      cur = adjDeg.join(broadcast(cur), $"a_src" === $"v")
+      // EAGER pin, kept after a measured round trip: a lazy pin
+      // (materialized by the next round's broadcast build) read 25-30%
+      // faster at sf0.1 (28→20 jobs) but consistently ~20% SLOWER at
+      // ×10 (warm 23.0/23.2 s vs 18.6/19.1 s) — the next round plans
+      // against an unmaterialized checkpoint, losing the exact stats
+      // the eager pin hands AQE (the pageRank round-fusion lesson).
+      // Scale wins over the local job floor.
+      cur = pins(adjDeg.join(broadcast(cur), $"a_src" === $"v")
         .filter($"idx" === expr(
           s"(((walk_id * 1000003 + $t * 10007 + v * 29) % 2147483647)" +
             " * 48271 % 2147483647) % deg"))
-        .select($"walk_id", $"a_dst".as("v"))
-        // EAGER pin, kept after a measured round trip: a lazy pin
-        // (materialized by the next round's broadcast build) read 25-30%
-        // faster at sf0.1 (28→20 jobs) but consistently ~20% SLOWER at
-        // ×10 (warm 23.0/23.2 s vs 18.6/19.1 s) — the next round plans
-        // against an unmaterialized checkpoint, losing the exact stats
-        // the eager pin hands AQE (the pageRank round-fusion lesson).
-        // Scale wins over the local job floor.
-        .localCheckpoint(true)
+        .select($"walk_id", $"a_dst".as("v")))
       parts += cur.select($"walk_id", lit(t.toLong).as("step"),
         $"v".as("node"))
     }
-    // every per-step cur pin feeds the output union and must stay; the
-    // adjacency pin's last consumer was round 8's (eager) checkpoint —
-    // release it before returning (round-15, guide §5)
-    graft.graph.Graph.releaseCheckpoint(adjDeg)
     parts.result().reduce(_ unionAll _).orderBy($"walk_id", $"step")
   }
   private val q303Sql = {
@@ -696,74 +670,63 @@ object GraphTraversalQueries extends QueryModule {
     * bucketing key); argmax = one partial-combinable min-struct
     * reduction per node (no candidate-stream sort). Labels
     * localCheckpoint-pin per round, superseded rounds released. */
-  private def q305(s: SparkSession, dir: String): DataFrame = {
+  private def q305(s: SparkSession, dir: String): DataFrame = Pins.scope(s) { pins =>
     import s.implicits._
     val rounds = 3
     // lazy pin: the mTotal count materializes the blocks in its own job
-    val edges0 = copurchaseEdges(s, dir).localCheckpoint(false)
+    val edges0 = pins(copurchaseEdges(s, dir), eager = false)
     val mTotal = edges0.count() // scalar: directed edge count (= 2m)
-    val deg = edges0.groupBy($"src").agg(count(lit(1)).as("k"))
-      .localCheckpoint(true)
+    val deg = pins(edges0.groupBy($"src").agg(count(lit(1)).as("k")))
     // the count's real job is pinning the deg checkpoint; an empty
     // graph is a valid input and yields an empty labeling (the q268
     // convention across the graph gates — empty result, not a throw)
-    if (deg.count() == 0) {
-      graft.graph.Graph.releaseCheckpoint(edges0)
-      graft.graph.Graph.releaseCheckpoint(deg)
-      return s.emptyDataset[(Long, Long)].toDF("node_id", "community")
+    if (deg.count() == 0) s.emptyDataset[(Long, Long)].toDF("node_id", "community")
+    else {
+      // Round shape (round-13 rework, each piece A/B'd at sf0.1): the
+      // candidate stream (node, neighbor-community, k_{i,c}) is |E|-sized,
+      // so (a) the argmax is the partial-combinable min(struct(-s, c))
+      // reduction — same (score DESC, community ASC) tie rule as the
+      // row_number window it replaces, without sorting the candidate
+      // stream per round — and (b) the own-community zero-candidate is
+      // merged AFTER the argmax with one least(): when (i, own) has
+      // neighbor support it already dominates its zero row (s is monotone
+      // in k_{i,c} at fixed c), so unioning |V| zero rows into the stream
+      // and re-grouping it — a second |E|-sized shuffle per round — was
+      // pure waste. AQE stays ON: runtime broadcasts of the |V|-sized
+      // deg/labels/tot sides beat every prescribed shape tried (AQE-off
+      // 9.6 s, state-sized width 11.6 s, edges pre-pinned by dst 9.5 s).
+      var labels = pins(deg.select($"src".as("id"), $"src".as("lab")))
+      for (_ <- 1 to rounds) {
+        val tot = labels.join(deg, $"id" === $"src").drop("src")
+          .groupBy($"lab").agg(sum($"k").as("tot"))
+          .select($"lab".as("t_lab"), $"tot")
+        val kic = edges0.join(labels.select($"id".as("dst_id"), $"lab"),
+            $"dst" === $"dst_id")
+          .groupBy($"src", $"lab").agg(count(lit(1)).as("kic"))
+          .select($"src".as("id"), $"lab".as("c"), $"kic")
+        val bestN = kic
+          .join(deg.select($"src".as("id"), $"k"), Seq("id"))
+          .join(labels.select($"id", $"lab".as("own")), Seq("id"))
+          .join(tot, $"c" === $"t_lab")
+          .select($"id", $"own", $"k",
+            struct(
+              (-(lit(mTotal) * $"kic" -
+                $"k" * ($"tot" - when($"c" === $"own", $"k").otherwise(0L))))
+                .as("ns"),
+              $"c").as("cand"))
+          .groupBy($"id")
+          .agg(min($"cand").as("best"),
+            first($"own").as("own"), first($"k").as("k"))
+        labels = pins(bestN
+          .join(tot, $"own" === $"t_lab")
+          .select($"id", least($"best",
+            struct(($"k" * ($"tot" - $"k")).as("ns"), $"own".as("c"))).as("best"))
+          .select($"id", $"best.c".as("lab")))
+        pins.sweep(edges0, deg, labels)
+      }
+      labels.select($"id".as("node_id"), $"lab".as("community"))
+        .orderBy($"node_id")
     }
-    // Round shape (round-13 rework, each piece A/B'd at sf0.1): the
-    // candidate stream (node, neighbor-community, k_{i,c}) is |E|-sized,
-    // so (a) the argmax is the partial-combinable min(struct(-s, c))
-    // reduction — same (score DESC, community ASC) tie rule as the
-    // row_number window it replaces, without sorting the candidate
-    // stream per round — and (b) the own-community zero-candidate is
-    // merged AFTER the argmax with one least(): when (i, own) has
-    // neighbor support it already dominates its zero row (s is monotone
-    // in k_{i,c} at fixed c), so unioning |V| zero rows into the stream
-    // and re-grouping it — a second |E|-sized shuffle per round — was
-    // pure waste. AQE stays ON: runtime broadcasts of the |V|-sized
-    // deg/labels/tot sides beat every prescribed shape tried (AQE-off
-    // 9.6 s, state-sized width 11.6 s, edges pre-pinned by dst 9.5 s).
-    var labels = deg.select($"src".as("id"), $"src".as("lab"))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val tot = labels.join(deg, $"id" === $"src").drop("src")
-        .groupBy($"lab").agg(sum($"k").as("tot"))
-        .select($"lab".as("t_lab"), $"tot")
-      val kic = edges0.join(labels.select($"id".as("dst_id"), $"lab"),
-          $"dst" === $"dst_id")
-        .groupBy($"src", $"lab").agg(count(lit(1)).as("kic"))
-        .select($"src".as("id"), $"lab".as("c"), $"kic")
-      val bestN = kic
-        .join(deg.select($"src".as("id"), $"k"), Seq("id"))
-        .join(labels.select($"id", $"lab".as("own")), Seq("id"))
-        .join(tot, $"c" === $"t_lab")
-        .select($"id", $"own", $"k",
-          struct(
-            (-(lit(mTotal) * $"kic" -
-              $"k" * ($"tot" - when($"c" === $"own", $"k").otherwise(0L))))
-              .as("ns"),
-            $"c").as("cand"))
-        .groupBy($"id")
-        .agg(min($"cand").as("best"),
-          first($"own").as("own"), first($"k").as("k"))
-      val prev = labels
-      labels = bestN
-        .join(tot, $"own" === $"t_lab")
-        .select($"id", least($"best",
-          struct(($"k" * ($"tot" - $"k")).as("ns"), $"own".as("c"))).as("best"))
-        .select($"id", $"best.c".as("lab"))
-        .localCheckpoint(true)
-      graft.graph.Graph.releaseCheckpoint(prev)
-    }
-    // the result scans only the final round's labels checkpoint; the
-    // |E| edge pin and the degree pin are dead once round 3 has
-    // materialized — release them in-gate (round-15, guide §5)
-    graft.graph.Graph.releaseCheckpoint(edges0)
-    graft.graph.Graph.releaseCheckpoint(deg)
-    labels.select($"id".as("node_id"), $"lab".as("community"))
-      .orderBy($"node_id")
   }
   private val q305Sql = {
     val rounds = 3
@@ -827,55 +790,42 @@ object GraphTraversalQueries extends QueryModule {
     * shuffles key on the node id, frontiers are localCheckpoint-pinned
     * ([[graft.graph.Graph]]'s discipline), and the oracle unrolls the
     * same 3 rounds as MATERIALIZED CTEs. */
-  private def q307(s: SparkSession, dir: String): DataFrame = {
+  private def q307(s: SparkSession, dir: String): DataFrame = Pins.scope(s) { pins =>
     import s.implicits._
     val rounds = 3
     def keyOf(v: org.apache.spark.sql.Column, r: Int): org.apache.spark.sql.Column =
       ((v * lit(1000003L) + lit(r * 10007L)) % lit(2147483647L)) *
         lit(48271L) % lit(2147483647L) * lit(2147483648L) + v
     // round 1's er IS the full edge list (everything starts active)
-    var er = copurchaseEdges(s, dir).localCheckpoint(true)
-    var active = er.select($"src".as("v")).distinct().localCheckpoint(true)
-    val out = Seq.newBuilder[DataFrame]
+    var er = pins(copurchaseEdges(s, dir))
+    var active = pins(er.select($"src".as("v")).distinct())
+    val out = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (r <- 1 to rounds) {
       val mn = er.groupBy($"src").agg(min(keyOf($"dst", r)).as("mn"))
-      val mis = active.join(mn, $"v" === mn("src"), "left")
+      val mis = pins(active.join(mn, $"v" === mn("src"), "left")
         .filter($"mn".isNull || keyOf($"v", r) < $"mn")
-        .select($"v").localCheckpoint(true)
-      val covered = er
+        .select($"v"))
+      val covered = pins(er
         .join(mis.select($"v".as("src")), Seq("src"), "leftsemi")
-        .select($"dst".as("v")).distinct().localCheckpoint(true)
+        .select($"dst".as("v")).distinct())
       out += mis.select($"v".as("node"), lit("mis").as("status"),
         lit(r.toLong).as("round"))
       out += covered.select($"v".as("node"), lit("covered").as("status"),
         lit(r.toLong).as("round"))
-      // superseded-state release (round-15, guide §5): each replacement
-      // checkpoint is EAGER, so the frame it supersedes is dead the
-      // moment the assignment returns — the loops' existing discipline,
-      // previously missing here (the gate carried every round's active
-      // and edge frame to the end of the query)
-      val prevActive = active
-      active = active.join(mis, Seq("v"), "leftanti")
-        .join(covered, Seq("v"), "leftanti").localCheckpoint(true)
-      graft.graph.Graph.releaseCheckpoint(prevActive)
+      active = pins(active.join(mis, Seq("v"), "leftanti")
+        .join(covered, Seq("v"), "leftanti"))
       if (r < rounds) {
         val removedSrc = mis.select($"v".as("src"))
           .unionAll(covered.select($"v".as("src")))
-        val prevEr = er
-        er = er.join(removedSrc, Seq("src"), "leftanti")
-          .join(removedSrc.select($"src".as("dst")), Seq("dst"), "leftanti")
-          .localCheckpoint(true)
-        graft.graph.Graph.releaseCheckpoint(prevEr)
+        er = pins(er.join(removedSrc, Seq("src"), "leftanti")
+          .join(removedSrc.select($"src".as("dst")), Seq("dst"), "leftanti"))
       }
+      pins.sweep(Seq(er, active) ++ out: _*)
     }
-    // the final round's restricted edge frame feeds nothing in the
-    // output (statuses come from the mis/covered/active checkpoints) —
-    // release it too
-    graft.graph.Graph.releaseCheckpoint(er)
     // survivors: round 0 = "not yet decided after 3 rounds"
     out += active.select($"v".as("node"), lit("active").as("status"),
       lit(0L).as("round"))
-    out.result().reduce(_ unionAll _).orderBy($"node")
+    out.reduce(_ unionAll _).orderBy($"node")
   }
   private val q307Sql = {
     def key(x: String, r: Int): String =
@@ -998,9 +948,9 @@ object GraphTraversalQueries extends QueryModule {
     * cite-able bound is |E|·maxdeg² < 2⁶³), and r is one double formula
     * over the six cells rounded at 6 dp — the q116/q278 moment
     * discipline on a graph. */
-  private def q291(s: SparkSession, dir: String): DataFrame = {
+  private def q291(s: SparkSession, dir: String): DataFrame = Pins.scope(s) { pins =>
     import s.implicits._
-    val edges = sparseSymEdges(s, dir).localCheckpoint(true)
+    val edges = pins(sparseSymEdges(s, dir))
     val deg = edges.groupBy($"src".as("id")).agg(count(lit(1)).as("d"))
     val cells = edges
       .join(deg.select($"id".as("src"), $"d".as("du")), "src")
@@ -1055,7 +1005,7 @@ object GraphTraversalQueries extends QueryModule {
     * vertex/edge keys, nothing is collected. Output: surviving edges
     * with their final-round support — the dense-cohesion backbone a
     * co-occurrence recommender mines. */
-  private def q280(s: SparkSession, dir: String): DataFrame = {
+  private def q280(s: SparkSession, dir: String): DataFrame = Pins.scope(s) { pins =>
     import s.implicits._
     val li = Tables.lineitem(s, dir)
       .select($"l_orderkey", $"l_linenumber", $"l_partkey")
@@ -1064,8 +1014,8 @@ object GraphTraversalQueries extends QueryModule {
           $"b.l_linenumber" === $"a.l_linenumber" + 1 &&
           $"a.l_partkey" =!= $"b.l_partkey")
       .select($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-    var canon = adj0.select(least($"u", $"v").as("u"), greatest($"u", $"v").as("v"))
-      .distinct().localCheckpoint(true)
+    var canon = pins(adj0.select(least($"u", $"v").as("u"), greatest($"u", $"v").as("v"))
+      .distinct())
     var last: DataFrame = null
     for (_ <- 1 to trussRounds) {
       val sym = canon.select($"u".as("src"), $"v".as("dst"))
@@ -1075,8 +1025,9 @@ object GraphTraversalQueries extends QueryModule {
         .join(sym.select($"src".as("v"), $"dst".as("w")), Seq("v", "w"))
         .groupBy($"u", $"v").agg(count(lit(1)).as("support"))
         .filter($"support" >= 2)
-      last = sup.localCheckpoint(true)
+      last = pins(sup)
       canon = last.select($"u", $"v")
+      pins.sweep(last)
     }
     last.select($"u", $"v", $"support").orderBy($"u", $"v")
   }
@@ -1115,40 +1066,28 @@ object GraphTraversalQueries extends QueryModule {
     * bounded at 16 levels (the bound is part of the contract and
     * replayed by the oracle's capped recursive CTEs); the only driver
     * transfers are the seed scalar and the one argmax row. */
-  private def q268(s: SparkSession, dir: String): DataFrame = {
+  private def q268(s: SparkSession, dir: String): DataFrame = Pins.scope(s) { pins =>
     import s.implicits._
     // COLLECT-TERMINATED gate: both sweeps reduce to driver scalars and
-    // the returned frame is a local Seq, so EVERY pin this gate creates
-    // (the edge pin + both sweeps' per-level dist stacks) is dead at
-    // return. Snapshot the persistent-RDD set at entry and free the
-    // delta before returning (round-15, guide §5) — previously the gate
-    // left 15 residual pins per execution for the session to carry.
-    // Assumes one query at a time on the session: the delta is every RDD
-    // pinned since entry, so a concurrent query's pins would be freed too.
-    val pinned0 = s.sparkContext.getPersistentRDDs.keySet
-    def releaseGatePins(): Unit =
-      s.sparkContext.getPersistentRDDs.foreach { case (id, r) =>
-        if (!pinned0.contains(id)) r.unpersist(blocking = false)
-      }
-    // lazy pin: the seed argmin materializes the blocks in its own job
-    val edges = sparseSymEdges(s, dir).localCheckpoint(false)
+    // the returned frame is a local Seq, so the scope frees every pin the
+    // gate created, both bfsHops sweeps' per-level dist pins included.
+    // Lazy pin: the seed argmin materializes the blocks in its own job.
+    val edges = pins(sparseSymEdges(s, dir), eager = false)
     val seedRow = edges.agg(min($"src")).collect().head
-    if (seedRow.isNullAt(0)) {  // empty graph: empty result, not an NPE
-      releaseGatePins()
-      return Seq.empty[(Long, Long, Long, Long, Long)]
+    if (seedRow.isNullAt(0)) // empty graph: empty result, not an NPE
+      Seq.empty[(Long, Long, Long, Long, Long)]
+        .toDF("seed_id", "far1_id", "ecc1", "far2_id", "pseudo_diameter")
+    else {
+      val seed = seedRow.getLong(0)
+      val b1 = Graph.bfsHops(edges, Seq(seed).toDF("id"), pdHops)
+      val far1Row = b1.orderBy($"hop".desc, $"id").limit(1).collect().head
+      val (far1, ecc1) = (far1Row.getLong(0), far1Row.getInt(1))
+      val b2 = Graph.bfsHops(edges, Seq(far1).toDF("id"), pdHops)
+      val far2Row = b2.orderBy($"hop".desc, $"id").limit(1).collect().head
+      Seq((seed, far1, ecc1.toLong, far2Row.getLong(0),
+          far2Row.getInt(1).toLong))
         .toDF("seed_id", "far1_id", "ecc1", "far2_id", "pseudo_diameter")
     }
-    val seed = seedRow.getLong(0)
-    val b1 = Graph.bfsHops(edges, Seq(seed).toDF("id"), pdHops)
-    val far1Row = b1.orderBy($"hop".desc, $"id").limit(1).collect().head
-    val (far1, ecc1) = (far1Row.getLong(0), far1Row.getInt(1))
-    val b2 = Graph.bfsHops(edges, Seq(far1).toDF("id"), pdHops)
-    val far2Row = b2.orderBy($"hop".desc, $"id").limit(1).collect().head
-    val out = Seq((seed, far1, ecc1.toLong, far2Row.getLong(0),
-        far2Row.getInt(1).toLong))
-      .toDF("seed_id", "far1_id", "ecc1", "far2_id", "pseudo_diameter")
-    releaseGatePins()
-    out
   }
   private val q268Sql =
     s"""WITH RECURSIVE adj AS (
@@ -1198,64 +1137,50 @@ object GraphTraversalQueries extends QueryModule {
     * by branching^hops ≈ 10⁴ on this consecutive-line adjacency, far
     * inside int64. Every frontier is localCheckpointed: 8 probe joins
     * over a lineage that would otherwise double per level. */
-  private def q272(s: SparkSession, dir: String): DataFrame = {
+  private def q272(s: SparkSession, dir: String): DataFrame = Pins.scope(s) { pins =>
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     // σ counts paths over the SIMPLE symmetric graph — parallel edges
     // would change the result, so the shared builder's dedup is load-
     // bearing here
-    val edges = sparseSymEdges(s, dir).localCheckpoint(true)
-    val f0 = edges.select($"src").distinct().orderBy($"src").limit(4)
-      .select($"src".as("seed"), $"src".as("id"), lit(1L).as("sigma"))
-      .localCheckpoint(true)
-    // forward + backward sweeps under a state-sized shuffle scope: the
-    // per-round state is (seed, id) pairs, ≤ 4·|V| rows — tiny exchanges
-    // where the session default's task overhead dominates
-    // ([[graft.graph.Graph.withStateSizedShuffle]])
+    val edges = pins(sparseSymEdges(s, dir))
+    val f0 = pins(edges.select($"src").distinct().orderBy($"src").limit(4)
+      .select($"src".as("seed"), $"src".as("id"), lit(1L).as("sigma")))
+    // forward + backward sweeps at a state-sized width: the per-round
+    // state is (seed, id) pairs, ≤ 4·|V| rows — tiny exchanges where the
+    // session default's task overhead dominates
     val nV = edges.agg(approx_count_distinct($"src").as("v"))
       .collect()(0).getLong(0)
-    Graph.withStateSizedShuffle(s, 4L * nV) {
-      // forward: layers(h) = vertices first reached at dist h, with σ
-      val layers = scala.collection.mutable.ArrayBuffer(f0)
-      var visited = f0.select($"seed", $"id").localCheckpoint(true)
-      for (h <- 1 to stHops) {
-        val fh = layers(h - 1).join(edges, $"id" === $"src")
-          .groupBy($"seed", $"dst").agg(sum($"sigma").as("sigma"))
-          .select($"seed", $"dst".as("id"), $"sigma")
-          .join(visited, Seq("seed", "id"), "left_anti")
-          .localCheckpoint(true)
-        layers += fh
-        // the union replacement is eager, so the superseded visited
-        // frame is dead now (round-15, guide §5)
-        val prevVisited = visited
-        visited = visited.union(fh.select($"seed", $"id")).localCheckpoint(true)
-        Graph.releaseCheckpoint(prevVisited)
-      }
-      // the anti-join filter has no consumer past the forward sweep
-      Graph.releaseCheckpoint(visited)
-      // backward: φ from the horizon inward; interior stress accumulates
-      var phi = layers(stHops).select($"seed", $"id", lit(0L).as("phi"))
-      var stress: DataFrame = null
-      for (h <- (stHops - 1) to 1 by -1) {
-        val contrib = layers(h).select($"seed", $"id").join(edges, $"id" === $"src")
-          .join(phi.select($"seed", $"id".as("dst"), $"phi"), Seq("seed", "dst"))
-          .groupBy($"seed", $"id").agg(sum(lit(1L) + $"phi").as("phi"))
-        val phiH = layers(h)
-          .join(contrib, Seq("seed", "id"), "left")
-          .na.fill(0L, Seq("phi")).localCheckpoint(true)
-        val part = phiH.select($"id", ($"sigma" * $"phi").as("sp"))
-        stress = if (stress == null) part else stress.union(part)
-        phi = phiH.select($"seed", $"id", $"phi")
-      }
-      // the result unions projections of the (eager) phiH checkpoints
-      // only — the edge pin, the seed frame and every σ layer are dead
-      // once the backward sweep has materialized (round-15, guide §5)
-      layers.foreach(Graph.releaseCheckpoint)
-      Graph.releaseCheckpoint(edges)
-      stress.groupBy($"id".as("part_id")).agg(sum($"sp").as("stress"))
-        .filter($"stress" > 0)
-        .orderBy($"stress".desc, $"part_id").limit(20)
+    pins.shrinkShuffle(4L * nV)
+    // forward: layers(h) = vertices first reached at dist h, with σ
+    val layers = scala.collection.mutable.ArrayBuffer(f0)
+    var visited = pins(f0.select($"seed", $"id"))
+    for (h <- 1 to stHops) {
+      val fh = pins(layers(h - 1).join(edges, $"id" === $"src")
+        .groupBy($"seed", $"dst").agg(sum($"sigma").as("sigma"))
+        .select($"seed", $"dst".as("id"), $"sigma")
+        .join(visited, Seq("seed", "id"), "left_anti"))
+      layers += fh
+      visited = pins(visited.union(fh.select($"seed", $"id")))
+      pins.sweep(Seq(edges, visited) ++ layers: _*)
     }
+    pins.sweep(Seq(edges) ++ layers: _*) // visited only filters the forward sweep
+    // backward: φ from the horizon inward; interior stress accumulates
+    var phi = layers(stHops).select($"seed", $"id", lit(0L).as("phi"))
+    var stress: DataFrame = null
+    for (h <- (stHops - 1) to 1 by -1) {
+      val contrib = layers(h).select($"seed", $"id").join(edges, $"id" === $"src")
+        .join(phi.select($"seed", $"id".as("dst"), $"phi"), Seq("seed", "dst"))
+        .groupBy($"seed", $"id").agg(sum(lit(1L) + $"phi").as("phi"))
+      val phiH = pins(layers(h)
+        .join(contrib, Seq("seed", "id"), "left")
+        .na.fill(0L, Seq("phi")))
+      val part = phiH.select($"id", ($"sigma" * $"phi").as("sp"))
+      stress = if (stress == null) part else stress.union(part)
+      phi = phiH.select($"seed", $"id", $"phi")
+    }
+    stress.groupBy($"id".as("part_id")).agg(sum($"sp").as("stress"))
+      .filter($"stress" > 0)
+      .orderBy($"stress".desc, $"part_id").limit(20)
   }
   private val q272Sql = {
     val fwd = (1 to stHops).map { h =>

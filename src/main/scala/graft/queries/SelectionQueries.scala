@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, QueryModule, Tables}
+import graft.{Pins, QueryDef, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -132,10 +132,9 @@ object SelectionQueries extends QueryModule {
     * the oracle replays the identical k rounds as unrolled CTEs with the
     * same (gain DESC, doc_id) argmax. Rounds where every remaining
     * document has zero marginal gain produce no pick on either side. */
-  private def q255(s: SparkSession, dir: String): DataFrame = {
+  private def q255(s: SparkSession, dir: String): DataFrame = Pins.scope(s) { pins =>
     import s.implicits._
-    val sh = TextDedupQueries.shingles(s, dir)
-      .select($"doc_id", $"shingle").localCheckpoint(true)
+    val sh = pins(TextDedupQueries.shingles(s, dir).select($"doc_id", $"shingle"))
     var covered: DataFrame = null
     val picks = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
     for (r <- 1 to coverK) {
@@ -151,9 +150,10 @@ object SelectionQueries extends QueryModule {
         // sf0.1, but slightly slower at ×10 (medians 6.6 vs 6.0 s warm)
         // — the next round's anti-join plans against an unmaterialized
         // checkpoint. Scale wins; see SCALE.md §Round 14 resumed.
-        covered = (if (covered == null) newCov else covered.union(newCov))
-          .distinct().localCheckpoint(true)
+        covered = pins((if (covered == null) newCov else covered.union(newCov))
+          .distinct())
         picks += ((r.toLong, pick, gain, covered.count()))
+        pins.sweep(sh, covered)
       }
     }
     picks.toSeq.toDF("pick_rank", "doc_id", "gain", "covered_cum")

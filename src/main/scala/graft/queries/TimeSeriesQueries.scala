@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, QueryModule, Tables}
+import graft.{Pins, QueryDef, QueryModule, Tables}
 import graft.operators.AsOfJoin
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1092,31 +1092,29 @@ object TimeSeriesQueries extends QueryModule {
     * cursor join on user_id plus one partial-combinable min-struct
     * aggregate; cursors shrink as users exhaust their intervals, and the
     * oracle unrolls the same 5 rounds as MATERIALIZED CTEs. */
-  private def q314(s: SparkSession, dir: String): DataFrame = {
+  private def q314(s: SparkSession, dir: String): DataFrame = Pins.scope(s) { pins =>
     import s.implicits._
     val rounds = 5
-    val iv = Tables.events(s, dir)
+    val iv = pins(Tables.events(s, dir)
       .select($"user_id", $"event_id", expr("ts div 1000").as("start_us"))
       .withColumn("end_us",
-        $"start_us" + (lit(1L) + pmod($"event_id", lit(7L))) * lit(600000000L))
-      .localCheckpoint(true)
-    var cursors = iv.select($"user_id").distinct()
-      .withColumn("cur", lit(Long.MinValue)).localCheckpoint(true)
-    val out = Seq.newBuilder[DataFrame]
+        $"start_us" + (lit(1L) + pmod($"event_id", lit(7L))) * lit(600000000L)))
+    var cursors = pins(iv.select($"user_id").distinct()
+      .withColumn("cur", lit(Long.MinValue)))
+    val out = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (r <- 1 to rounds) {
-      val pick = iv.join(cursors, Seq("user_id"))
+      val pick = pins(iv.join(cursors, Seq("user_id"))
         .filter($"start_us" >= $"cur")
         .groupBy($"user_id")
         .agg(min(struct($"end_us", $"start_us", $"event_id")).as("p"))
         .select($"user_id", $"p.event_id".as("event_id"),
-          $"p.start_us".as("start_us"), $"p.end_us".as("end_us"))
-        .localCheckpoint(true)
+          $"p.start_us".as("start_us"), $"p.end_us".as("end_us")))
       out += pick.select($"user_id", lit(r.toLong).as("pick_no"),
         $"event_id", $"start_us", $"end_us")
-      cursors = pick.select($"user_id", $"end_us".as("cur"))
-        .localCheckpoint(true)
+      cursors = pins(pick.select($"user_id", $"end_us".as("cur")))
+      pins.sweep(Seq(iv, cursors) ++ out: _*)
     }
-    out.result().reduce(_ unionAll _).orderBy($"user_id", $"pick_no")
+    out.reduce(_ unionAll _).orderBy($"user_id", $"pick_no")
   }
   private val q314Sql = {
     val rounds = (1 to 5).map { r =>

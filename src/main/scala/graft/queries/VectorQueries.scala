@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, QueryModule, Tables}
+import graft.{Pins, QueryDef, QueryModule, Tables}
 import graft.functions.{aggregates, vector}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -300,9 +300,9 @@ object VectorQueries extends QueryModule {
     * fall back to BroadcastNestedLoopJoin. */
   /** IVF index + search, shared by q59 (the ranking) and q70 (the recall
     * measurement): returns (ranked cell assignments with `crk`, un-sorted
-    * top-5 rows). */
+    * top-5 rows). Its pins belong to the caller's `pins` scope. */
   private[queries] def ivfRankedAndTop(s: SparkSession, dir: String,
-      nprobe: Int = 2): (DataFrame, DataFrame) = {
+      pins: Pins, nprobe: Int = 2): (DataFrame, DataFrame) = {
     implicit val sp: SparkSession = s
     import s.implicits._
     val celled = normed(s, dir).withColumn("cell", vector.signBits($"v", 0, 4))
@@ -311,23 +311,21 @@ object VectorQueries extends QueryModule {
     // them, and without the cut each branch would recompute the centroid
     // aggregate — measured 2.3x slower. Checkpointing model state (16
     // centroids + 2 rows/vector) is distributed, not a driver collect.
-    val cents = celled
+    val cents = pins(celled
       .select($"cell", posexplode($"v").as(Seq("d", "x")))
       .groupBy($"cell", $"d")
       .agg((sum($"x".cast("decimal(20,12)")).cast("double") / count(lit(1))).as("cx"))
       .groupBy($"cell")
       .agg(sort_array(collect_list(struct($"d", $"cx"))).as("ds"))
       .select($"cell".as("ccell"), expr("transform(ds, s -> s.cx)").as("cv"))
-      .withColumn("cnrm", vector.norm($"cv"))
-      .localCheckpoint()
+      .withColumn("cnrm", vector.norm($"cv")))
     val assign = celled.withColumn("one", pmod($"vec_id", lit(1L)))
       .join(broadcast(cents.withColumn("one", pmod($"ccell", lit(1)).cast("long"))), "one")
       .select($"vec_id", $"v", $"nrm", $"ccell",
         round(vector.dot($"v", $"cv") / ($"nrm" * $"cnrm"), 6).as("ccos"))
     val wAssign = Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"ccell")
-    val ranked = assign.withColumn("crk", row_number().over(wAssign))
-      .filter($"crk" <= nprobe)
-      .localCheckpoint()
+    val ranked = pins(assign.withColumn("crk", row_number().over(wAssign))
+      .filter($"crk" <= nprobe))
     val members = ranked.filter($"crk" === 1)
       .select($"ccell".as("mcell"), $"vec_id".as("mid"), $"v".as("mv"), $"nrm".as("mnrm"))
     val probes = ranked.select($"vec_id", $"v", $"nrm", $"ccell".as("pcell"))
@@ -344,9 +342,9 @@ object VectorQueries extends QueryModule {
     (ranked, top)
   }
 
-  private def q59(s: SparkSession, dir: String): DataFrame = {
+  private def q59(s: SparkSession, dir: String): DataFrame = Pins.scope(s) { pins =>
     import s.implicits._
-    ivfRankedAndTop(s, dir)._2.orderBy($"vec_id", $"rk")
+    ivfRankedAndTop(s, dir, pins)._2.orderBy($"vec_id", $"rk")
   }
 
   /** CTE stack replicating the IVF pipeline (exposes `rkd` with per-vector
@@ -432,9 +430,9 @@ object VectorQueries extends QueryModule {
     * recall degrades (AdversarialGeometrySpec measures exactly that on a
     * 48-clusters-in-16-cells fixture). nprobe=2 IS q70 (gate-pinned). */
   private[queries] def ivfRecallAt(s: SparkSession, dir: String,
-      nprobe: Int): DataFrame = {
+      nprobe: Int): DataFrame = Pins.scope(s) { pins =>
     import s.implicits._
-    val (ranked, ivf) = ivfRankedAndTop(s, dir, nprobe)
+    val (ranked, ivf) = ivfRankedAndTop(s, dir, pins, nprobe)
     val exact = exactTopK(s, dir, 5).select($"vec_id", $"nn_vec")
     val hits = exact
       .join(ivf.select($"vec_id", $"nn_vec", lit(1).as("__hit")),
@@ -712,14 +710,18 @@ object VectorQueries extends QueryModule {
   /** The propagation rounds shared by q257 (exact-kNN neighbors) and
     * q260 (IVF neighbors): seeds keep their label, unlabeled nodes take
     * the majority label of their labeled neighbors (count DESC, label ASC
-    * tie-break), newly labeled nodes vote next round. */
-  private def lpPropagate(s: SparkSession, dir: String, nn: DataFrame): DataFrame = {
+    * tie-break), newly labeled nodes vote next round. `neighbors` builds
+    * the (`vec_id`, `nn_vec`) list; any pin it makes goes through the
+    * given scope. */
+  private def lpPropagate(s: SparkSession, dir: String)(
+      neighbors: Pins => DataFrame): DataFrame = Pins.scope(s) { pins =>
     import s.implicits._
+    val nn = pins(neighbors(pins))
     val seeds = Tables.embeddings(s, dir)
       .filter($"vec_id" % 3 === 0)
       .select($"vec_id", $"label".cast("long").as("label"),
         lit("seed").as("origin"))
-    var labeled = seeds.localCheckpoint(true)
+    var labeled = pins(seeds)
     for (r <- 1 to lpRounds) {
       val votes = nn
         .join(labeled.select($"vec_id".as("nid"), $"label"),
@@ -731,7 +733,8 @@ object VectorQueries extends QueryModule {
       val won = votes
         .withColumn("rk", row_number().over(w)).filter($"rk" === 1)
         .select($"vec_id", $"label", lit(s"round$r").as("origin"))
-      labeled = labeled.union(won).localCheckpoint(true)
+      labeled = pins(labeled.union(won))
+      pins.sweep(nn, labeled)
     }
     labeled.orderBy($"vec_id")
   }
@@ -759,8 +762,7 @@ object VectorQueries extends QueryModule {
 
   private def q257(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    lpPropagate(s, dir,
-      exactTopK(s, dir, 3).select($"vec_id", $"nn_vec").localCheckpoint(true))
+    lpPropagate(s, dir)(_ => exactTopK(s, dir, 3).select($"vec_id", $"nn_vec"))
   }
   private val q257Sql =
     s"""$normedSql,
@@ -782,9 +784,8 @@ object VectorQueries extends QueryModule {
     * rehearsal pairs its ratio with q257's declared-quadratic row. */
   private def q260(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    lpPropagate(s, dir,
-      ivfRankedAndTop(s, dir)._2.filter($"rk" <= 3)
-        .select($"vec_id", $"nn_vec").localCheckpoint(true))
+    lpPropagate(s, dir)(pins => ivfRankedAndTop(s, dir, pins)._2
+      .filter($"rk" <= 3).select($"vec_id", $"nn_vec"))
   }
   private val q260Sql =
     s"""$ivfCtes,

@@ -133,44 +133,4 @@ class GraphSpec extends SparkTestBase {
     // arriving at 3 at t4, the t3 edge to 5 is stale but the t6 one works
     assert(a(5L) === 6L)
   }
-
-  test("releaseCheckpoint frees a superseded round's blocks (r11 mitigation)") {
-    import spark.implicits._
-    import org.apache.spark.storage.StorageLevel
-    val df = (1L to 100L).toDF("id").localCheckpoint(true)
-    val rdd = df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.head
-    assert(rdd.getStorageLevel != StorageLevel.NONE,
-      "eager localCheckpoint must persist its blocks")
-    Graph.releaseCheckpoint(df)
-    assert(rdd.getStorageLevel == StorageLevel.NONE,
-      "releaseCheckpoint must unpersist the checkpointed RDD")
-    // and the loops still answer correctly with releases in place:
-    // a 4-node ring, every node reaches rank fixpoint symmetrically
-    val ring = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L)).toDF("src", "dst")
-    val ranks = Graph.pageRank(ring, iters = 8)
-      .as[(Long, Long)].collect().toMap
-    assert(ranks.size == 4 && ranks.values.toSet.size == 1,
-      s"symmetric ring must rank uniformly: $ranks")
-  }
-
-  test("releaseCheckpoint refuses a DERIVED frame over a live checkpoint") {
-    import spark.implicits._
-    import org.apache.spark.storage.StorageLevel
-    // a projection over a checkpoint is NOT the checkpoint: releasing its
-    // embedded LogicalRDD would free state other plans may still join
-    // (round-11 ADVICE). The guard must throw and leave the blocks alive.
-    val base = (1L to 100L).toDF("id").localCheckpoint(true)
-    val rdd = base.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.head
-    val derived = base.select(($"id" * 2).as("id2"))
-    val ex = intercept[IllegalStateException](Graph.releaseCheckpoint(derived))
-    assert(ex.getMessage.contains("LogicalRDD root"))
-    assert(rdd.getStorageLevel != StorageLevel.NONE,
-      "the refused release must leave the shared checkpoint's blocks alive")
-    Graph.releaseCheckpoint(base) // the bare frame still releases fine
-    assert(rdd.getStorageLevel == StorageLevel.NONE)
-  }
 }

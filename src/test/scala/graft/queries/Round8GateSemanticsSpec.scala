@@ -164,6 +164,61 @@ class Round8GateSemanticsSpec extends SparkTestBase {
     assert(left.isEmpty, s"q305 left ${left.size} checkpoint pins registered")
   }
 
+  // Every iterative gate pins through one scope, so after it returns the
+  // persistent RDDs it added must be exactly the pins its result still
+  // reads: its plan's LogicalRDD leaves and what their lineage reaches.
+  // A superseded round left registered shows up as an extra id; a
+  // released pin the result still reads shows up as a freed leaf. The
+  // session registers persisted RDDs weakly, so a leaked pin whose frame
+  // was garbage-collected would drop out of the registry unseen; a
+  // poller holds every RDD registered during the gate so that only an
+  // explicit unpersist removes it.
+  Seq("q94_bfs_reach", "q95_pagerank", "q217_coreness", "q236_adamic_adar",
+    "q250_weighted_sssp", "q253_hits", "q254_temporal_reach",
+    "q255_greedy_coverage", "q257_label_propagation", "q260_label_prop_ivf",
+    "q261_personalized_pagerank", "q268_pseudo_diameter",
+    "q272_stress_centrality", "q280_ktruss", "q291_assortativity",
+    "q303_random_walks", "q305_louvain_phase1", "q307_luby_mis",
+    "q314_activity_selection", "q338_maximal_spans",
+    "q67_connected_components", "q59_ann_ivf", "q70_ivf_recall").foreach { gate =>
+    test(s"${gate.takeWhile(_ != '_')} leaves only the pins its result reads") {
+      import org.apache.spark.rdd.RDD
+      import org.apache.spark.storage.StorageLevel
+      val sc = spark.sparkContext
+      val pinned0 = sc.getPersistentRDDs.keySet
+      val seen = new java.util.concurrent.ConcurrentHashMap[Int, RDD[_]]()
+      val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val poller = new Thread(() => while (!done.get) {
+        sc.getPersistentRDDs.foreach { case (id, r) => seen.put(id, r) }
+        Thread.sleep(2)
+      })
+      poller.start()
+      val out = try {
+        val df = SparkEntry.queries(gate)(spark, dir)
+        df.collect()
+        df
+      } finally { done.set(true); poller.join() }
+      val added = sc.getPersistentRDDs.keySet -- pinned0
+      try {
+        val leaves = out.queryExecution.analyzed.collectWithSubqueries {
+          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+        }
+        val reads = scala.collection.mutable.Set.empty[Int]
+        def walk(r: RDD[_]): Unit =
+          if (reads.add(r.id)) r.dependencies.foreach(d => walk(d.rdd))
+        leaves.foreach(walk)
+        assert(leaves.forall(_.getStorageLevel != StorageLevel.NONE),
+          s"$gate's result reads a released pin")
+        val stray = added -- reads
+        assert(stray.isEmpty,
+          s"$gate left ${stray.size} of ${added.size} pins its result does not read")
+      } finally {
+        added.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist()))
+        seen.clear() // the held RDDs stay reachable until the checks are done
+      }
+    }
+  }
+
   test("q306 best match equals the window-argmax reformulation; JW is symmetric here") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
